@@ -52,16 +52,7 @@ object Bench {
     // times the sweep across REAL executor JVMs (the driver never sets
     // it, so driver runs keep the local[n] contract)
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession.wireLocalCluster(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"), master)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = GraftSession.start(GraftSession.builder(master, cpus.toInt))
     // dev-only: SPARK_GRAFT_ONLY=q110,q47 times a subset (the driver
     // never sets it, so driver runs always sweep the full inventory)
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -30,16 +30,6 @@ package graft
   */
 object BenchAB {
 
-  private val addOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).map(p => s"--add-opens=$p=ALL-UNNAMED")
-
   /** One child Bench run of `names` on `classesDir`'s tree; returns
     * query → attempts (seconds; empty on child failure). */
   def runOnce(classesDir: String, names: Seq[String], sfDir: String,
@@ -47,7 +37,8 @@ object BenchAB {
     val javaBin = sys.props("java.home") + "/bin/java"
     val runsOut = java.nio.file.Files
       .createTempFile(s"bench_ab_$label", ".json").toString
-    val cmd = Seq(javaBin, "-Xmx8g") ++ addOpens ++ Seq(
+    val moduleOpts = org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions().split(' ')
+    val cmd = Seq(javaBin, "-Xmx8g") ++ moduleOpts ++ Seq(
       "-Dspark.ui.enabled=false",
       "-cp", s"$classesDir:/opt/spark/jars/*",
       "graft.Bench")

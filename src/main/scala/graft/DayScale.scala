@@ -248,20 +248,8 @@ object DayScale {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")
     val spark =
       if (!master.startsWith("local-cluster")) GraftSession.local()
-      else {
-        val s = GraftSession.wireLocalCluster(org.apache.spark.sql.SparkSession.builder()
-          .master(master)
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.ui.enabled", "false"), master)
-          .getOrCreate()
-        s.sparkContext.setLogLevel("WARN")
-        graft.functions.GraftExtensions.register(s)
-        s
-      }
+      else GraftSession.start(GraftSession.builder(master,
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt))
     // task-level spill accounting (reported per stage in the JSON — the
     // 100× evidence that EP3 spilled rather than fit)
     val memSpilled = new java.util.concurrent.atomic.AtomicLong

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.launcher.JavaModuleOptions
 import org.apache.spark.sql.SparkSession
 
 /** Central SparkSession factory so Bench/Verify/tests/jobs share one
@@ -25,26 +26,54 @@ object GraftSession {
     * value. Test suites alias this same object (SparkTestBase). */
   val sessionConfLock: Object = new Object
 
-  def local(cores: String = "*", shufflePartitions: Option[Int] = None): SparkSession = {
-    val parts = shufflePartitions.getOrElse(
-      if (cores == "*") Runtime.getRuntime.availableProcessors() else cores.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft")
+  /** The one session builder: every common config for `master`, plus
+    * the engine's extensions. Callers that need one extra static config
+    * chain `.config(...)` on the result; [[start]] finishes it. */
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
+    SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
+      .config(conf(master, shufflePartitions))
+
+  /** The configs [[builder]] sets, by key. A `local-cluster[n,c,mem]`
+    * master (the multi-JVM proof mode behind MULTIJVM_r10.json) also
+    * gets executor wiring: executor JVMs are spawned from SPARK_HOME and
+    * know nothing of sbt's classpath, so ship the graft classes and
+    * Spark's own JDK module options. The caller must also export
+    * SPARK_SCALA_VERSION=2.13 (the in-process executor launcher cannot
+    * infer it outside the shell scripts). */
+  private[graft] def conf(master: String, shufflePartitions: Int): Map[String, String] = {
+    val common = Map(
+      "spark.master" -> master,
+      "spark.app.name" -> "graft",
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.ui.enabled" -> "false",
       // The driver testdata's `events` table carries parquet TIMESTAMP(NANOS),
       // which Spark only reads as a raw long (SPARK-40819). Tables.events()
       // rebuilds a proper TimestampType column from it.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    if (!master.startsWith("local-cluster")) common
+    else common ++ Map(
+      "spark.executor.extraClassPath" ->
+        new java.io.File("target/scala-2.13/classes").getAbsolutePath,
+      "spark.executor.extraJavaOptions" -> JavaModuleOptions.defaultModuleOptions(),
+      "spark.executor.memory" -> sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
+  }
+
+  /** getOrCreate, then WARN logging and the engine's SQL functions. */
+  def start(builder: SparkSession.Builder): SparkSession = {
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.register(spark)
     spark
+  }
+
+  def local(cores: String = "*", shufflePartitions: Option[Int] = None): SparkSession = {
+    val parts = shufflePartitions.getOrElse(
+      if (cores == "*") Runtime.getRuntime.availableProcessors() else cores.toInt)
+    start(builder(s"local[$cores]", parts))
   }
 
   /** Per-operator-family shuffle-volume expansion factors for
@@ -86,33 +115,6 @@ object GraftSession {
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     parts
   }
-
-  /** Multi-JVM wiring for a `local-cluster[n,c,mem]` master (the proof
-    * mode behind MULTIJVM_r10.json): executor JVMs are spawned from
-    * SPARK_HOME and know nothing of sbt's classpath, so ship the graft
-    * classes and the JDK17 module opens. No-op for local[n] masters.
-    * The caller must also export SPARK_SCALA_VERSION=2.13 (the
-    * in-process executor launcher cannot infer it outside the shell
-    * scripts). */
-  def wireLocalCluster(builder: SparkSession.Builder, master: String): SparkSession.Builder =
-    if (!master.startsWith("local-cluster")) builder
-    else {
-      val classDir = new java.io.File("target/scala-2.13/classes").getAbsolutePath
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar",
-      ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-      builder
-        .config("spark.executor.extraClassPath", classDir)
-        .config("spark.executor.extraJavaOptions", addOpens)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
-    }
 
   /** Apply the must-have configs to an externally built session (e.g. the
     * driver's own). Runtime-settable confs + function registration only. */

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan archiver (NOT part of the driver contract): write
   * `explain("formatted")` of the named gate entries to
   * `plans/<tag>/<query>_<suffix>.txt` — the optimization-round evidence
@@ -11,18 +9,16 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    if (args.length < 3) {
+      System.err.println("usage: graft.PlanDump <sfDir> <outDir> <suffix> [query-prefix ...]")
+      sys.exit(2)
+    }
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.start(GraftSession.builder("local[4]", 4))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()
     val sel = SparkEntry.queries.filter { case (k, _) =>
       names.exists(k.startsWith) }

@@ -1,19 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Dev-only harness (like ScaleProbe — NOT part of the driver
+/** Dev-only harness (NOT part of the driver
   * contract): time the slowest GATE queries themselves at k× sf0.1,
   * with the operating envelope's partition-scaling rule applied
   * (README "Operating envelope" #1: shuffle partitions ∝ corpus
-  * factor, `max(32, 32·k/10)`). ScaleProbe validated the rule on the
-  * wide *shapes*; this validates it on the gate queries as deployed —
+  * factor, `max(32, 32·k/10)`). The scale probe behind SCALE100_r09.json
+  * validated the rule on the wide *shapes*; this validates it on the gate queries as deployed —
   * the evidence that the published per-query numbers extrapolate
   * ~linearly for the non-iterative entries.
   *
-  * The k× corpus is synthesized as id-offset shards (ScaleProbe's
-  * scaffold): documents get a per-shard text marker (near- not
+  * The k× corpus is synthesized as id-offset shards (graft.Sharding):
+  * documents get a per-shard text marker (near- not
   * byte-dups), lineitem offsets both join keys (k isolated
   * co-occurrence components), events offsets event/user ids (k× users,
   * sessions scale linearly), embeddings get a per-shard ±1e-4 coordinate
@@ -47,16 +47,7 @@ object ScaleBench {
     // scale-sized candidate-pair/iterative workloads) that neither
     // MULTIJVM (gate-scale) nor the local[n] sweeps exercise alone
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession.wireLocalCluster(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"), master)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = GraftSession.start(GraftSession.builder(master, 32))
 
     // ---- synthesize the k× dir (graft.Sharding — the one scaffold all
     // scale harnesses share, keeping their published numbers comparable)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 
 /** The ONE k×-corpus synthesis scaffold shared by every scale harness
-  * (ScaleProbe, ScaleBench, PairProbe): id-offset shards with a
+  * (ScaleBench, DayScale, AdaptiveGate): id-offset shards with a
   * deterministic per-shard perturbation so cross-shard rows are near-
   * not byte-dups. Shared on purpose — the harnesses' published numbers
   * (SCALE10/SCALE30, probe notes) are only comparable if they scale
@@ -56,7 +56,7 @@ object Sharding {
     *
     * Why this exists alongside [[documentsDistinct]]: token-salting
     * (`s0_` prefixes) preserves token-level structure but DISTORTS
-    * character-level statistics — measured at 2× (GraphSpanProbe): the
+    * character-level statistics — measured at 2× (SCALE100_SPAN_r10.json's probe): the
     * winnow 16-gram vocabulary collapses ×0.2 (salt floods the grams)
     * and text length grows ~60% (3 salt chars per token), so span-dedup
     * inputs grow super-linearly under that scaffold — an artifact, not

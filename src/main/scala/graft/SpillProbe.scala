@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * spilled MB, fingerprint match) + target/spill_probe.json.
   *
   * Env: SPARK_SCALA_VERSION=2.13 and SPARK_HOME must be set for the
-  * local-cluster executor launcher (see GraftSession.wireLocalCluster).
+  * local-cluster executor launcher (see GraftSession.conf).
   */
 object SpillProbe {
 
@@ -74,17 +74,6 @@ object SpillProbe {
     (r.getLong(0), r.getLong(1))
   }
 
-  private def baseBuilder(master: String, parts: Int): SparkSession.Builder =
-    GraftSession.wireLocalCluster(
-      SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", parts.toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false"),
-      master)
-
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/scale_runs/k10_neardup")
     val names = if (args.length > 1) args(1).split(',').toSeq else DefaultNames
@@ -97,11 +86,9 @@ object SpillProbe {
     // the mechanism that actually runs at 100 TB.
     val memFraction = args.lift(4).map(_.toDouble).getOrElse(0.08)
     require(new java.io.File(s"$dir/documents.parquet").exists(),
-      s"no scaled corpus at $dir — run tools/scalebench.sh 10 first")
+      s"no scaled corpus at $dir — run tools/run.sh ScaleBench 10 first")
 
     def runAll(spark: SparkSession): Map[String, ((Long, Long), Double)] = {
-      spark.sparkContext.setLogLevel("WARN")
-      graft.functions.GraftExtensions.register(spark)
       names.map { n =>
         val t0 = System.nanoTime()
         val fp = fingerprint(SparkEntry.queries(n)(spark, dir))
@@ -115,7 +102,7 @@ object SpillProbe {
 
     // pass 1 — roomy reference
     val ref = {
-      val s = baseBuilder("local[8]", 32).getOrCreate()
+      val s = GraftSession.start(GraftSession.builder("local[8]", 32))
       try runAll(s) finally s.stop()
     }
 
@@ -123,9 +110,9 @@ object SpillProbe {
     val memSpilled = new java.util.concurrent.atomic.AtomicLong
     val diskSpilled = new java.util.concurrent.atomic.AtomicLong
     val spill = {
-      val s = baseBuilder(s"local-cluster[2,4,$workerMb]", spillParts)
-        .config("spark.memory.fraction", memFraction.toString)
-        .getOrCreate()
+      val s = GraftSession.start(
+        GraftSession.builder(s"local-cluster[2,4,$workerMb]", spillParts)
+          .config("spark.memory.fraction", memFraction.toString))
       s.sparkContext.addSparkListener(new SparkListener {
         override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
           val m = te.taskMetrics
@@ -136,8 +123,6 @@ object SpillProbe {
         }
       })
       try {
-        s.sparkContext.setLogLevel("WARN")
-        graft.functions.GraftExtensions.register(s)
         names.map { n =>
           val m0 = memSpilled.get(); val d0 = diskSpilled.get()
           val t0 = System.nanoTime()

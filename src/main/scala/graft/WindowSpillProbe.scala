@@ -48,19 +48,10 @@ object WindowSpillProbe {
           col("distancia"), col("velocidade_media"))
     }
 
-    def builder(master: String, parts: Int) =
-      GraftSession.wireLocalCluster(SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", parts.toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false"), master)
-
     // pass 1 — roomy
     val (refFp, refSec) = {
-      val s = builder("local[8]", 32).getOrCreate()
+      val s = GraftSession.start(GraftSession.builder("local[8]", 32))
       try {
-        s.sparkContext.setLogLevel("WARN")
         val t0 = System.nanoTime()
         val fp = SpillProbe.fingerprint(hopsDf(s))
         (fp, (System.nanoTime() - t0) / 1e9)
@@ -72,11 +63,10 @@ object WindowSpillProbe {
     val memSpilled = new java.util.concurrent.atomic.AtomicLong
     val diskSpilled = new java.util.concurrent.atomic.AtomicLong
     val (spFp, spSec) = {
-      val s = builder(s"local-cluster[2,4,$workerMb]", 4)
-        .config("spark.memory.fraction", memFraction.toString)
-        .getOrCreate()
+      val s = GraftSession.start(
+        GraftSession.builder(s"local-cluster[2,4,$workerMb]", 4)
+          .config("spark.memory.fraction", memFraction.toString))
       try {
-        s.sparkContext.setLogLevel("WARN")
         s.sparkContext.addSparkListener(new SparkListener {
           override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
             val m = te.taskMetrics

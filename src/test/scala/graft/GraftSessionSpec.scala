@@ -58,6 +58,27 @@ class GraftSessionSpec extends SparkTestBase {
     }
   }
 
+  test("builder configs: local[n] is in-process; local-cluster adds executor wiring") {
+    val executorKeys = Set("spark.executor.extraClassPath",
+      "spark.executor.extraJavaOptions", "spark.executor.memory")
+    val local = GraftSession.conf("local[3]", 3)
+    assert(local("spark.master") === "local[3]")
+    assert(local("spark.sql.shuffle.partitions") === "3")
+    assert(local.keySet.intersect(executorKeys).isEmpty)
+    // no cluster starts: the configs are read, not applied
+    val master = "local-cluster[2,4,1024]"
+    val cluster = GraftSession.conf(master, 8)
+    assert(cluster("spark.executor.extraClassPath") ===
+      new java.io.File("target/scala-2.13/classes").getAbsolutePath)
+    assert(cluster("spark.executor.extraJavaOptions") ===
+      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
+    assert(cluster("spark.executor.memory") ===
+      sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
+    // the common configs are the same for both kinds of master
+    assert(cluster -- executorKeys ===
+      local ++ Map("spark.master" -> master, "spark.sql.shuffle.partitions" -> "8"))
+  }
+
   test("events table reads through a tuned session at every granularity") {
     SparkTestBase.sessionConfLock.synchronized {
       GraftSession.tune(spark)

@@ -1,0 +1,47 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-scan guards on the engine's shape: sessions come from one
+  * factory, and `src/main` holds no main beyond the listed entry points
+  * (README "Entry points"). Scans the source text; starts no Spark. */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private def sources(root: String): Seq[(Path, String)] = {
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p -> Files.readString(p))
+    finally walk.close()
+  }
+
+  // split so this file does not match itself
+  private val builderCall = ("SparkSession" + """\s*\.\s*builder\s*\(\s*\)""").r
+
+  test("session builders: only GraftSession.scala calls the SparkSession builder") {
+    val sites = (sources("src/main") ++ sources("src/test")).flatMap { case (p, text) =>
+      builderCall.findAllIn(text).map(_ => p.getFileName.toString)
+    }
+    assert(sites == Seq("GraftSession.scala"),
+      s"build sessions with GraftSession.builder(master, shufflePartitions); found: $sites")
+  }
+
+  private val allowedMains = Set(
+    "Bench", "BenchAB", "Verify", "DayScale", "ScaleBench", "AdaptiveGate",
+    "PlanDump", "FaultProbe", "StreamFaultProbe", "SpillProbe", "WindowSpillProbe")
+
+  test("main objects in src/main equal the entry-point allow-list") {
+    val objectDecl = """\bobject\s+(\w+)""".r
+    val mains = sources("src/main").flatMap { case (_, text) =>
+      // a main belongs to the nearest object declared before it
+      """\bdef\s+main\s*\(""".r.findAllMatchIn(text).map { m =>
+        objectDecl.findAllMatchIn(text.substring(0, m.start)).map(_.group(1)).toSeq.last
+      }
+    }.toSet
+    assert(mains == allowedMains,
+      s"unlisted: ${mains -- allowedMains}; missing: ${allowedMains -- mains}")
+  }
+}

@@ -8,19 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session + scratch dirs for suites. One session per suite
   * (lazy), scratch under target/ (gitignored, inside the repo). */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftExtensions.register(s)
-    s
-  }
+  lazy val spark: SparkSession =
+    graft.GraftSession.start(graft.GraftSession.builder("local[4]", 4).appName("graft-test"))
 
   def scratchDir(prefix: String): Path = {
     val base = Paths.get("target", "test-scratch")

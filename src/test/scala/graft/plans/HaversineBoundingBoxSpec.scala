@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftExtensions, Haversine}
+import graft.functions.Haversine
 
 /** The bounding-box rule must fire on radius predicates (Column API and
   * SQL), keep results identical, and leave non-radius plans untouched.
@@ -19,16 +19,7 @@ class HaversineBoundingBoxSpec extends AnyFunSuite {
     // SparkContext is still shared).
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    GraftExtensions.register(s)
-    s
+    graft.GraftSession.start(graft.GraftSession.builder("local[4]", 4).appName("graft-ext-test"))
   }
 
   private def pts = {
