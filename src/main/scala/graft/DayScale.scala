@@ -252,17 +252,7 @@ object DayScale {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt))
     // task-level spill accounting (reported per stage in the JSON — the
     // 100× evidence that EP3 spilled rather than fit)
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          memSpilled.addAndGet(m.memoryBytesSpilled)
-          diskSpilled.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
+    val spill = new SpillProbe.SpillMeter(spark)
     val rawBase = new java.io.File(s"$base/raw/posicoes").getAbsolutePath
     val posPath = new java.io.File(s"$base/posicoes").getAbsolutePath
     val outBase = new java.io.File(s"$base/out").getAbsolutePath
@@ -366,7 +356,7 @@ object DayScale {
         s"vehicle-pass sharding unsound: $uncastable rows have a " +
           "null/non-numeric prefixo_veiculo and would be dropped from every pass")
     }
-    val ep3Mem0 = memSpilled.get(); val ep3Dsk0 = diskSpilled.get()
+    val (ep3Mem0, ep3Dsk0) = spill.settled()
     val (counts, tEp3) =
       if (vehiclePasses == 1) timed {
         graft.olhovivo.AverageSpeeds.run(spark, posPath, date, outBase)
@@ -381,9 +371,10 @@ object DayScale {
         }.reduce((a, b) => a.map { case (k, v) => k -> (v + b(k)) })
       }
     // listener-bus drain before snapshotting (ADVICE r13 #2)
-    val ep3SpillMb =
-      (SpillProbe.settle(memSpilled.get() + diskSpilled.get())
-        - ep3Mem0 - ep3Dsk0) >> 20
+    val ep3SpillMb = {
+      val (m, d) = spill.settled()
+      (m + d - ep3Mem0 - ep3Dsk0) >> 20
+    }
     println(s"DAYSCALE EP3: $counts, ${tEp3.round} s, spilled $ep3SpillMb MB" +
       (if (vehiclePasses > 1) s" ($vehiclePasses vehicle-closed passes)" else ""))
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.launcher.JavaModuleOptions
 import org.apache.spark.sql.SparkSession
 
 /** Central SparkSession factory so Bench/Verify/tests/jobs share one
@@ -37,8 +36,9 @@ object GraftSession {
   /** The configs [[builder]] sets, by key. A `local-cluster[n,c,mem]`
     * master (the multi-JVM proof mode behind MULTIJVM_r10.json) also
     * gets executor wiring: executor JVMs are spawned from SPARK_HOME and
-    * know nothing of sbt's classpath, so ship the graft classes and
-    * Spark's own JDK module options. The caller must also export
+    * know nothing of sbt's classpath, so ship the graft classes. (Spark
+    * already prepends its JDK module options to the executor's
+    * `extraJavaOptions`.) The caller must also export
     * SPARK_SCALA_VERSION=2.13 (the in-process executor launcher cannot
     * infer it outside the shell scripts). */
   private[graft] def conf(master: String, shufflePartitions: Int): Map[String, String] = {
@@ -58,7 +58,6 @@ object GraftSession {
     else common ++ Map(
       "spark.executor.extraClassPath" ->
         new java.io.File("target/scala-2.13/classes").getAbsolutePath,
-      "spark.executor.extraJavaOptions" -> JavaModuleOptions.defaultModuleOptions(),
       "spark.executor.memory" -> sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
   }
 

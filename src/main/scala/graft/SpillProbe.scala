@@ -60,6 +60,30 @@ object SpillProbe {
     last
   }
 
+  /** Task-level spill accounting for `spark`: one task-end listener
+    * summing the memory and disk bytes every task spills. Shared by
+    * SpillProbe, WindowSpillProbe and DayScale. */
+  final class SpillMeter(spark: SparkSession) {
+    private val mem = new java.util.concurrent.atomic.AtomicLong
+    private val disk = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+        val m = te.taskMetrics
+        if (m != null) {
+          mem.addAndGet(m.memoryBytesSpilled)
+          disk.addAndGet(m.diskBytesSpilled)
+        }
+      }
+    })
+
+    /** (memory, disk) bytes spilled so far, read once the listener bus
+      * has delivered trailing task-end events ([[settle]]). */
+    def settled(): (Long, Long) = {
+      settle(mem.get() + disk.get())
+      (mem.get(), disk.get())
+    }
+  }
+
   /** Order-independent relation fingerprint: (XOR of row xxhash64, count)
     * with columns name-sorted and null marked distinctly from "". Long
     * overflow wraps identically everywhere — still a fingerprint. */
@@ -107,31 +131,22 @@ object SpillProbe {
     }
 
     // pass 2 — starved executors, undersized partitions, spill metrics
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong
     val spill = {
       val s = GraftSession.start(
         GraftSession.builder(s"local-cluster[2,4,$workerMb]", spillParts)
           .config("spark.memory.fraction", memFraction.toString))
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            memSpilled.addAndGet(m.memoryBytesSpilled)
-            diskSpilled.addAndGet(m.diskBytesSpilled)
-          }
-        }
-      })
+      val meter = new SpillMeter(s)
       try {
         names.map { n =>
-          val m0 = memSpilled.get(); val d0 = diskSpilled.get()
+          val (m0, d0) = meter.settled()
           val t0 = System.nanoTime()
           val fp = fingerprint(SparkEntry.queries(n)(s, dir))
           val secs = (System.nanoTime() - t0) / 1e9
           s.catalog.clearCache()
           Checkpoints.releaseAll(s)
-          val mem = (memSpilled.get() - m0) >> 20
-          val dsk = (diskSpilled.get() - d0) >> 20
+          val (m1, d1) = meter.settled()
+          val mem = (m1 - m0) >> 20
+          val dsk = (d1 - d0) >> 20
           println(f"SPILLPROBE spill $n%-22s $secs%7.1f s  fp=$fp  spilled mem ${mem} MB disk ${dsk} MB")
           n -> ((fp, secs, mem, dsk))
         }.toMap

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -60,33 +59,22 @@ object WindowSpillProbe {
     println(f"WINDOWSPILL roomy  $refSec%7.1f s fp=$refFp")
 
     // pass 2 — starved executors
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong
-    val (spFp, spSec) = {
+    val (spFp, spSec, (memB, dskB)) = {
       val s = GraftSession.start(
         GraftSession.builder(s"local-cluster[2,4,$workerMb]", 4)
           .config("spark.memory.fraction", memFraction.toString))
       try {
-        s.sparkContext.addSparkListener(new SparkListener {
-          override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) {
-              memSpilled.addAndGet(m.memoryBytesSpilled)
-              diskSpilled.addAndGet(m.diskBytesSpilled)
-            }
-          }
-        })
+        val meter = new SpillProbe.SpillMeter(s)
         val t0 = System.nanoTime()
         val fp = SpillProbe.fingerprint(hopsDf(s))
-        (fp, (System.nanoTime() - t0) / 1e9)
+        val secs = (System.nanoTime() - t0) / 1e9
+        // settled: task-end events are async, so an immediate read can
+        // undercount and spuriously fail the spill>0 gate (ADVICE r13 #2)
+        (fp, secs, meter.settled())
       } finally s.stop()
     }
-    // drain the listener bus before snapshotting — task-end events are
-    // async, so an immediate read can undercount and spuriously fail
-    // the spill>0 gate (ADVICE r13 #2)
-    SpillProbe.settle(memSpilled.get() + diskSpilled.get())
-    val memMb = memSpilled.get() >> 20
-    val dskMb = diskSpilled.get() >> 20
+    val memMb = memB >> 20
+    val dskMb = dskB >> 20
     val ok = refFp == spFp
     println(f"WINDOWSPILL spill  $spSec%7.1f s fp=$spFp  spilled mem $memMb MB disk $dskMb MB")
 

@@ -17,6 +17,12 @@ object CorpusOps {
 
   type Q = (SparkSession, String) => DataFrame
 
+  /** The oracles' IDN vocabulary: the one internationalized host label
+    * of the messy-URL fixture ([[messyUrlMkCte]]). DuckDB has no
+    * punycode, so [[graft.text.UrlCanonical.duckCanonCtes]] replays it
+    * as a replace() on the lowered host. */
+  private[queries] val DuckIdn = Seq("bücher" -> "xn--bcher-kva")
+
   /** Shared tokenization CTE — the Portable.tokens mirror. */
   private val toksCte =
     """WITH t AS (
@@ -775,6 +781,18 @@ object CorpusOps {
        |  FROM h0)""".stripMargin
   }
 
+  /** The html zone's CHUNK-level survivors (the [[htmlStatusPages]]
+    * read level: quote-class docs drop instead of being repaired) as
+    * `hin (doc_id, html)` — the oracle prefix of q174/q177/q180/q183. */
+  private def chunkHinCte: String = {
+    import graft.sources.Warc.{TruncMod, NoLenMod, MagicQuoteMod}
+    s"""hin AS (
+       |  SELECT doc_id, $htmlSqlExpr AS html
+       |  FROM documents
+       |  WHERE doc_id % $TruncMod <> 0 AND doc_id % $NoLenMod <> 0
+       |    AND doc_id % $MagicQuoteMod <> 0)""".stripMargin
+  }
+
   val q140Sql: String =
     s"""WITH $htmlInCtes,
        |${graft.text.HtmlExtract.duckBlockCtes("hin", "doc_id")}
@@ -804,8 +822,7 @@ object CorpusOps {
 
   val q144Sql: String =
     s"""WITH $messyUrlMkCte,
-       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id",
-          idnVocab = Seq("bücher" -> "xn--bcher-kva"))}
+       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn)}
        |SELECT ${graft.text.UrlCanonical.duckHostOf("canon")} AS host,
        |  count(*) AS n_docs,
        |  count(DISTINCT canon) AS n_pages,
@@ -914,6 +931,36 @@ object CorpusOps {
   private def duckHdrHas(x: String, token: String): String =
     s"""regexp_matches($x, '(^|[\\s,])$token([\\s,]|$$)')"""
 
+  /** The robots verdict of q180/q183, added to a page frame carrying
+    * `payload` and the X-Robots-Tag lines `__xl`: `__noidx` = q174's
+    * meta ∪ scoped-header union for `noindex` (or `none`). */
+  private def withNoindex(pages: DataFrame): DataFrame = {
+    import graft.text.HtmlExtract
+    pages
+      .withColumn("__x", xRobotsBodiesCol(col("__xl")))
+      .withColumn("__c", HtmlExtract.metaRobotsContents(col("payload")))
+      .withColumn("__noidx",
+        HtmlExtract.metaDirective(col("__c"), "noindex") ||
+          HtmlExtract.metaDirective(col("__c"), "none") ||
+          hdrHas(col("__x"), "noindex") || hdrHas(col("__x"), "none"))
+  }
+
+  /** Oracle twin of [[withNoindex]] over `hin`: `ni (doc_id, noindex)`. */
+  private def duckNoindexCtes: String = {
+    import graft.text.HtmlExtract.{duckMetaDirective, duckMetaRobotsContents}
+    s"""ni0 AS (
+       |  SELECT doc_id, ${duckMetaRobotsContents("html")} AS c,
+       |    ${duckXBodies(duckXrtList)} AS x
+       |  FROM hin),
+       |ni AS (
+       |  SELECT doc_id,
+       |    (${duckMetaDirective("c", "noindex")}
+       |     OR ${duckMetaDirective("c", "none")}
+       |     OR ${duckHdrHas("x", "noindex")}
+       |     OR ${duckHdrHas("x", "none")}) AS noindex
+       |  FROM ni0)""".stripMargin
+  }
+
   /** q174 (r18, beyond plan; r19 upgrade — VERDICT r18 missing #5): the
     * HEADER channel of the robots-meta screen — the X-Robots-Tag
     * convention — MERGED with q170's meta channel: a directive from
@@ -964,22 +1011,16 @@ object CorpusOps {
   }
 
   val q174Sql: String = {
-    import graft.sources.Warc.{TruncMod, NoLenMod, MagicQuoteMod}
     def duckHdr(token: String) = duckHdrHas("x", token)
     // the twin replays the full value grammar: per-line values as a
     // LIST, lowercased, scope-filtered to ('', unavailable_after,
     // graftbot), scope prefixes stripped, survivors comma-joined
-    s"""WITH hs AS (
-       |  SELECT doc_id, $htmlSqlExpr AS html,
-       |    $duckXrtList AS xl
-       |  FROM documents
-       |  WHERE doc_id % $TruncMod <> 0 AND doc_id % $NoLenMod <> 0
-       |    AND doc_id % $MagicQuoteMod <> 0),
+    s"""WITH $chunkHinCte,
        |mc AS (
        |  SELECT doc_id,
        |    ${graft.text.HtmlExtract.duckMetaRobotsContents("html")} AS c,
-       |    ${duckXBodies("xl")} AS x
-       |  FROM hs),
+       |    ${duckXBodies(duckXrtList)} AS x
+       |  FROM hin),
        |fl AS (
        |  SELECT doc_id,
        |    (${graft.text.HtmlExtract.duckMetaDirective("c", "noindex")}
@@ -1007,39 +1048,11 @@ object CorpusOps {
     * EFFECTIVE base (composes with `<base href>`), entity-decoded;
     * attribute order and directive case are free; name-only metas
     * (the q170 fixtures) never count. Map-only after the zone read. */
-  def q175MetaRefresh(s: SparkSession, dir: String): DataFrame = {
-    val zone = htmlZoneFor(s, dir)
-    import graft.text.{HtmlExtract, UrlCanonical}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
-    graft.sources.Warc.readExactClean(s, zone)
-      .select(
-        regexp_extract(col("url"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-        col("payload"))
-      .select(col("doc_id"), col("payload"), messyUrlCol.as("__url"))
-      .withColumn("__base", UrlCanonical.let(
-          HtmlExtract.decodeEntities(HtmlExtract.baseHref(col("payload")))) { bh =>
-        UrlCanonical.let(col("__url")) { u =>
-          when(bh.isNull || bh === "" ||
-              (bh.rlike(SchemeLike) && !bh.rlike(Hierarchical)), u)
-            .otherwise(UrlCanonical.resolve(u, bh))
-        }
-      })
-      .withColumn("__rc", HtmlExtract.metaRefreshContent(col("payload")))
-      // extract with the Column API, cast via expr on the extracted
-      // column — regex literals inside expr() hit SQL string escaping
-      .withColumn("__secs", regexp_extract(col("__rc"), "^\\s*([0-9]{1,7})", 1))
-      .withColumn("refresh_secs", expr("try_cast(__secs AS BIGINT)"))
-      .withColumn("__t", HtmlExtract.decodeEntities(trim(
-        regexp_extract(col("__rc"), "(?is)[;,]\\s*url\\s*=\\s*(.+)$", 1))))
-      .withColumn("refresh_target_canon",
-        UrlCanonical.let(col("__t")) { t =>
-          when(t.isNull || t === "" ||
-              (t.rlike(SchemeLike) && !t.rlike(Hierarchical)), lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), t)))
-        })
-      .withColumn("self_canon", UrlCanonical.canonicalize(col("__url")))
+  def q175MetaRefresh(s: SparkSession, dir: String): DataFrame =
+    WebGraphOps.withLinkSignals(WebGraphOps.htmlPages(s, dir),
+        "refresh_target_canon")
+      .withColumn("self_canon",
+        graft.text.UrlCanonical.canonicalize(col("__url")))
       .withColumn("is_redirect",
         coalesce(col("refresh_secs") === 0L, lit(false)) &&
           col("refresh_target_canon").isNotNull)
@@ -1048,51 +1061,14 @@ object CorpusOps {
           .otherwise(col("self_canon")))
       .select(col("doc_id"), col("refresh_secs"), col("refresh_target_canon"),
         col("self_canon"), col("is_redirect"), col("consolidation_key"))
-  }
 
-  val q175Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
-    import graft.text.{HtmlExtract, UrlCanonical}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
-    s"""WITH ${HtmlExtract.duckEntmapCte},
+  lazy val q175Sql: String =
+    s"""WITH ${graft.text.HtmlExtract.duckEntmapCte},
        |$htmlInCtes,
        |$messyUrlMkCte,
-       |bh1 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckBaseHref("html"))} AS bh
-       |  FROM hin, entmap),
-       |bri AS (
-       |  SELECT b.doc_id, mk.url AS base, b.bh AS ref
-       |  FROM bh1 b JOIN mk ON b.doc_id = mk.doc_id
-       |  WHERE b.bh IS NOT NULL AND b.bh <> ''
-       |    AND NOT (regexp_matches(b.bh, '$SchemeLike')
-       |             AND NOT regexp_matches(b.bh, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("bri", "doc_id", "eb")},
-       |ebase AS (
-       |  SELECT mk.doc_id, coalesce(eb4.target, mk.url) AS url
-       |  FROM mk LEFT JOIN eb4 ON mk.doc_id = eb4.doc_id),
-       |rc0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckMetaRefreshContent("html")} AS rc
-       |  FROM hin),
-       |rc1 AS (
-       |  SELECT r.doc_id,
-       |    try_cast(regexp_extract(r.rc, '^\\s*([0-9]{1,7})', 1) AS BIGINT)
-       |      AS refresh_secs,
-       |    ${HtmlExtract.duckEntities(
-            "trim(regexp_extract(r.rc, '(?is)[;,]\\s*url\\s*=\\s*(.+)$', 1))")} AS t
-       |  FROM rc0 r, entmap),
-       |tri AS (
-       |  SELECT r.doc_id, e.url AS base, r.t AS ref
-       |  FROM rc1 r JOIN ebase e ON r.doc_id = e.doc_id
-       |  WHERE r.t IS NOT NULL AND r.t <> ''
-       |    AND NOT (regexp_matches(r.t, '$SchemeLike')
-       |             AND NOT regexp_matches(r.t, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("tri", "doc_id", "tv")},
-       |ttin AS (SELECT doc_id, target AS url FROM tv4),
-       |${UrlCanonical.duckCanonCtes("ttin", "doc_id", idn, "tc")},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")}
+       |${WebGraphOps.duckEbaseCtes},
+       |${WebGraphOps.duckRefreshCtes},
+       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")}
        |SELECT h.doc_id, r.refresh_secs, tc4.canon AS refresh_target_canon,
        |  s4.canon AS self_canon,
        |  (coalesce(r.refresh_secs = 0, false) AND tc4.canon IS NOT NULL)
@@ -1101,9 +1077,8 @@ object CorpusOps {
        |       THEN tc4.canon ELSE s4.canon END AS consolidation_key
        |FROM hin h
        |JOIN s4 ON h.doc_id = s4.doc_id
-       |LEFT JOIN rc1 r ON h.doc_id = r.doc_id
+       |LEFT JOIN rf1 r ON h.doc_id = r.doc_id
        |LEFT JOIN tc4 ON h.doc_id = tc4.doc_id""".stripMargin
-  }
 
   // ------------------- q176 server-redirect chain resolution (r19)
 
@@ -1205,7 +1180,7 @@ object CorpusOps {
     * classes → canonical capture per canon → edge set → 4 unrolled
     * chain steps → `rres (node, final_canon, hops, is_loop, settled)`
     * + `rcap (self_canon)`. */
-  private[queries] def duckRedirectCtes(idn: Seq[(String, String)]): String = {
+  private[queries] def duckRedirectCtes: String = {
     import graft.sources.Warc.{TruncMod, NoLenMod, MagicQuoteMod}
     val steps = new StringBuilder
     for (i <- 1 to MaxRedirectHops) {
@@ -1262,7 +1237,7 @@ object CorpusOps {
        |    AND location IS NOT NULL AND location <> ''),
        |${graft.text.UrlCanonical.duckResolveCtes("rei", "self_canon", "rr")},
        |ret AS (SELECT self_canon, target AS url FROM rr4),
-       |${graft.text.UrlCanonical.duckCanonCtes("ret", "self_canon", idn, "re")},
+       |${graft.text.UrlCanonical.duckCanonCtes("ret", "self_canon", DuckIdn, "re")},
        |redge AS (SELECT self_canon AS src, canon AS dst FROM re4),
        |rc0 AS (
        |  SELECT self_canon AS node, self_canon AS cur, CAST(0 AS BIGINT) AS hops,
@@ -1275,17 +1250,15 @@ object CorpusOps {
        |rcap AS (SELECT self_canon FROM rcc)""".stripMargin
   }
 
-  val q176Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  val q176Sql: String =
     s"""WITH $messyUrlMkCte,
-       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
-       |${duckRedirectCtes(idn)}
+       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
+       |$duckRedirectCtes
        |SELECT p.doc_id, p.self_canon, r.final_canon, r.hops, r.is_loop,
        |  r.settled, (c.self_canon IS NOT NULL) AS final_captured
        |FROM rsp p
        |JOIN rres r ON p.self_canon = r.node
        |LEFT JOIN rcap c ON r.final_canon = c.self_canon""".stripMargin
-  }
 
   // ------------------- q177 unified consolidation key (r19)
 
@@ -1308,40 +1281,8 @@ object CorpusOps {
     * channel's read level); q172/q175 keep their own zone reads and
     * are unchanged. */
   def q177ConsolidationKey(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.{HtmlExtract, UrlCanonical}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
     val (pages, resolved) = redirectResolved(s, dir)
-    val sig = pages
-      .withColumn("__base", UrlCanonical.let(
-          HtmlExtract.decodeEntities(HtmlExtract.baseHref(col("payload")))) { bh =>
-        UrlCanonical.let(col("__url")) { u =>
-          when(bh.isNull || bh === "" ||
-              (bh.rlike(SchemeLike) && !bh.rlike(Hierarchical)), u)
-            .otherwise(UrlCanonical.resolve(u, bh))
-        }
-      })
-      .withColumn("__rc", HtmlExtract.metaRefreshContent(col("payload")))
-      .withColumn("__secs", regexp_extract(col("__rc"), "^\\s*([0-9]{1,7})", 1))
-      .withColumn("refresh_secs", expr("try_cast(__secs AS BIGINT)"))
-      .withColumn("__t", HtmlExtract.decodeEntities(trim(
-        regexp_extract(col("__rc"), "(?is)[;,]\\s*url\\s*=\\s*(.+)$", 1))))
-      .withColumn("__rt",
-        UrlCanonical.let(col("__t")) { t =>
-          when(t.isNull || t === "" ||
-              (t.rlike(SchemeLike) && !t.rlike(Hierarchical)), lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), t)))
-        })
-      .withColumn("__ch",
-        HtmlExtract.decodeEntities(HtmlExtract.canonicalHref(col("payload"))))
-      .withColumn("__cc",
-        UrlCanonical.let(col("__ch")) { ch =>
-          when(ch.isNull || ch === "" ||
-              (ch.rlike(SchemeLike) && !ch.rlike(Hierarchical)), lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), ch)))
-        })
+    val sig = WebGraphOps.withLinkSignals(pages, "__rt")
     val isRedirect = col("hops") > 0 && !col("is_loop") && col("settled")
     val isRefresh = coalesce(col("refresh_secs") === 0L, lit(false)) &&
       col("__rt").isNotNull
@@ -1357,68 +1298,15 @@ object CorpusOps {
           .otherwise(col("self_canon")).as("consolidation_key"))
   }
 
-  val q177Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
-    import graft.text.{HtmlExtract, UrlCanonical}
-    import graft.sources.Warc.{TruncMod, NoLenMod, MagicQuoteMod}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
-    s"""WITH ${HtmlExtract.duckEntmapCte},
+  lazy val q177Sql: String =
+    s"""WITH ${graft.text.HtmlExtract.duckEntmapCte},
        |$messyUrlMkCte,
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
-       |hin AS (
-       |  SELECT doc_id, $htmlSqlExpr AS html
-       |  FROM documents
-       |  WHERE doc_id % $TruncMod <> 0 AND doc_id % $NoLenMod <> 0
-       |    AND doc_id % $MagicQuoteMod <> 0),
-       |bh1 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckBaseHref("html"))} AS bh
-       |  FROM hin, entmap),
-       |bri AS (
-       |  SELECT b.doc_id, mk.url AS base, b.bh AS ref
-       |  FROM bh1 b JOIN mk ON b.doc_id = mk.doc_id
-       |  WHERE b.bh IS NOT NULL AND b.bh <> ''
-       |    AND NOT (regexp_matches(b.bh, '$SchemeLike')
-       |             AND NOT regexp_matches(b.bh, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("bri", "doc_id", "eb")},
-       |ebase AS (
-       |  SELECT mk.doc_id, coalesce(eb4.target, mk.url) AS url
-       |  FROM mk LEFT JOIN eb4 ON mk.doc_id = eb4.doc_id),
-       |rf0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckMetaRefreshContent("html")} AS rc
-       |  FROM hin),
-       |rf1 AS (
-       |  SELECT r.doc_id,
-       |    try_cast(regexp_extract(r.rc, '^\\s*([0-9]{1,7})', 1) AS BIGINT)
-       |      AS refresh_secs,
-       |    ${HtmlExtract.duckEntities(
-            "trim(regexp_extract(r.rc, '(?is)[;,]\\s*url\\s*=\\s*(.+)$', 1))")} AS t
-       |  FROM rf0 r, entmap),
-       |tri AS (
-       |  SELECT r.doc_id, e.url AS base, r.t AS ref
-       |  FROM rf1 r JOIN ebase e ON r.doc_id = e.doc_id
-       |  WHERE r.t IS NOT NULL AND r.t <> ''
-       |    AND NOT (regexp_matches(r.t, '$SchemeLike')
-       |             AND NOT regexp_matches(r.t, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("tri", "doc_id", "tv")},
-       |ttin AS (SELECT doc_id, target AS url FROM tv4),
-       |${UrlCanonical.duckCanonCtes("ttin", "doc_id", idn, "tc")},
-       |ch0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckCanonicalHref("html"))} AS ch
-       |  FROM hin, entmap),
-       |cri AS (
-       |  SELECT c.doc_id, e.url AS base, c.ch AS ref
-       |  FROM ch0 c JOIN ebase e ON c.doc_id = e.doc_id
-       |  WHERE c.ch IS NOT NULL AND c.ch <> ''
-       |    AND NOT (regexp_matches(c.ch, '$SchemeLike')
-       |             AND NOT regexp_matches(c.ch, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("cri", "doc_id", "cn")},
-       |ctin AS (SELECT doc_id, target AS url FROM cn4),
-       |${UrlCanonical.duckCanonCtes("ctin", "doc_id", idn, "cx")},
-       |${duckRedirectCtes(idn)}
+       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
+       |$chunkHinCte,
+       |${WebGraphOps.duckEbaseCtes},
+       |${WebGraphOps.duckRefreshCtes},
+       |${WebGraphOps.duckCanonicalLinkCtes},
+       |$duckRedirectCtes
        |SELECT p.doc_id, p.self_canon,
        |  CASE WHEN r.hops > 0 AND NOT r.is_loop AND r.settled
        |       THEN 'redirect'
@@ -1437,7 +1325,6 @@ object CorpusOps {
        |LEFT JOIN rf1 rf ON p.doc_id = rf.doc_id
        |LEFT JOIN tc4 ON p.doc_id = tc4.doc_id
        |LEFT JOIN cx4 ON p.doc_id = cx4.doc_id""".stripMargin
-  }
 
   // ------------------- q180 index-eligibility screen (r19)
 
@@ -1461,15 +1348,8 @@ object CorpusOps {
     * over the chunk survivors plus ONE canon-keyed join against the
     * resolved redirect relation. */
   def q180IndexEligibility(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.HtmlExtract
     val (pages, resolved) = redirectResolved(s, dir)
-    val flagged = pages
-      .withColumn("__x", xRobotsBodiesCol(col("__xl")))
-      .withColumn("__c", HtmlExtract.metaRobotsContents(col("payload")))
-      .withColumn("__noidx",
-        HtmlExtract.metaDirective(col("__c"), "noindex") ||
-          HtmlExtract.metaDirective(col("__c"), "none") ||
-          hdrHas(col("__x"), "noindex") || hdrHas(col("__x"), "none"))
+    val flagged = withNoindex(pages)
     val reason = when(col("status").between(400L, 599L), lit("error"))
       .when(col("status").between(300L, 399L) || col("hops") > 0,
         lit("redirect"))
@@ -1482,42 +1362,23 @@ object CorpusOps {
         col("reason"))
   }
 
-  val q180Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
-    s"""WITH ${graft.text.HtmlExtract.duckEntmapCte},
-       |$messyUrlMkCte,
-       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
-       |${duckRedirectCtes(idn)},
-       |el0 AS (
-       |  SELECT doc_id, $htmlSqlExpr AS html, $duckXrtList AS xl
-       |  FROM documents
-       |  WHERE doc_id % ${graft.sources.Warc.TruncMod} <> 0
-       |    AND doc_id % ${graft.sources.Warc.NoLenMod} <> 0
-       |    AND doc_id % ${graft.sources.Warc.MagicQuoteMod} <> 0),
-       |el1 AS (
-       |  SELECT e0.doc_id, p.status, p.self_canon,
-       |    ${graft.text.HtmlExtract.duckMetaRobotsContents("html")} AS c,
-       |    ${duckXBodies("xl")} AS x
-       |  FROM el0 e0 JOIN rsp p ON e0.doc_id = p.doc_id, entmap)
-       |SELECT e.doc_id, e.self_canon,
-       |  (CASE WHEN e.status BETWEEN 400 AND 599 THEN 'error'
-       |        WHEN e.status BETWEEN 300 AND 399 OR r.hops > 0
-       |        THEN 'redirect'
-       |        WHEN (${graft.text.HtmlExtract.duckMetaDirective("c", "noindex")}
-       |              OR ${graft.text.HtmlExtract.duckMetaDirective("c", "none")}
-       |              OR ${duckHdrHas("x", "noindex")}
-       |              OR ${duckHdrHas("x", "none")}) THEN 'noindex'
-       |        ELSE 'ok' END) AS reason,
-       |  ((CASE WHEN e.status BETWEEN 400 AND 599 THEN 'error'
-       |        WHEN e.status BETWEEN 300 AND 399 OR r.hops > 0
-       |        THEN 'redirect'
-       |        WHEN (${graft.text.HtmlExtract.duckMetaDirective("c", "noindex")}
-       |              OR ${graft.text.HtmlExtract.duckMetaDirective("c", "none")}
-       |              OR ${duckHdrHas("x", "noindex")}
-       |              OR ${duckHdrHas("x", "none")}) THEN 'noindex'
-       |        ELSE 'ok' END) = 'ok') AS eligible
-       |FROM el1 e JOIN rres r ON e.self_canon = r.node""".stripMargin
-  }
+  val q180Sql: String =
+    s"""WITH $messyUrlMkCte,
+       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
+       |$duckRedirectCtes,
+       |$chunkHinCte,
+       |$duckNoindexCtes,
+       |el AS (
+       |  SELECT p.doc_id, p.self_canon,
+       |    CASE WHEN p.status BETWEEN 400 AND 599 THEN 'error'
+       |         WHEN p.status BETWEEN 300 AND 399 OR r.hops > 0
+       |         THEN 'redirect'
+       |         WHEN n.noindex THEN 'noindex'
+       |         ELSE 'ok' END AS reason
+       |  FROM rsp p JOIN ni n ON p.doc_id = n.doc_id
+       |  JOIN rres r ON p.self_canon = r.node)
+       |SELECT doc_id, self_canon, reason, (reason = 'ok') AS eligible
+       |FROM el""".stripMargin
 
   // ------------------- q183 consolidated corpus rollup (r19)
 
@@ -1535,48 +1396,8 @@ object CorpusOps {
     * — the corpus-build invariant this entry pins. Exchanges: the one
     * key-partitioned aggregate every consolidation pays. */
   def q183ConsolidatedCorpus(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.{HtmlExtract, UrlCanonical}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
     val (pages, resolved) = redirectResolved(s, dir)
-    val sig = pages
-      .withColumn("__base", UrlCanonical.let(
-          HtmlExtract.decodeEntities(HtmlExtract.baseHref(col("payload")))) { bh =>
-        UrlCanonical.let(col("__url")) { u =>
-          when(bh.isNull || bh === "" ||
-              (bh.rlike(SchemeLike) && !bh.rlike(Hierarchical)), u)
-            .otherwise(UrlCanonical.resolve(u, bh))
-        }
-      })
-      .withColumn("__rc", HtmlExtract.metaRefreshContent(col("payload")))
-      // extract with the Column API, cast via expr on the extracted
-      // column — regex literals inside expr() hit SQL string escaping
-      .withColumn("__secs", regexp_extract(col("__rc"), "^\\s*([0-9]{1,7})", 1))
-      .withColumn("refresh_secs", expr("try_cast(__secs AS BIGINT)"))
-      .withColumn("__t", HtmlExtract.decodeEntities(trim(
-        regexp_extract(col("__rc"), "(?is)[;,]\\s*url\\s*=\\s*(.+)$", 1))))
-      .withColumn("__rt",
-        UrlCanonical.let(col("__t")) { t =>
-          when(t.isNull || t === "" ||
-              (t.rlike(SchemeLike) && !t.rlike(Hierarchical)), lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), t)))
-        })
-      .withColumn("__ch",
-        HtmlExtract.decodeEntities(HtmlExtract.canonicalHref(col("payload"))))
-      .withColumn("__cc",
-        UrlCanonical.let(col("__ch")) { ch =>
-          when(ch.isNull || ch === "" ||
-              (ch.rlike(SchemeLike) && !ch.rlike(Hierarchical)), lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), ch)))
-        })
-      .withColumn("__x", xRobotsBodiesCol(col("__xl")))
-      .withColumn("__c", HtmlExtract.metaRobotsContents(col("payload")))
-      .withColumn("__noidx",
-        HtmlExtract.metaDirective(col("__c"), "noindex") ||
-          HtmlExtract.metaDirective(col("__c"), "none") ||
-          hdrHas(col("__x"), "noindex") || hdrHas(col("__x"), "none"))
+    val sig = withNoindex(WebGraphOps.withLinkSignals(pages, "__rt"))
     val isRedirect = col("hops") > 0 && !col("is_loop") && col("settled")
     val isRefresh = coalesce(col("refresh_secs") === 0L, lit(false)) &&
       col("__rt").isNotNull
@@ -1601,80 +1422,16 @@ object CorpusOps {
         countDistinct(col("channel")).as("n_channels"))
   }
 
-  val q183Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
-    import graft.text.{HtmlExtract, UrlCanonical}
-    import graft.sources.Warc.{TruncMod, NoLenMod, MagicQuoteMod}
-    val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
-    val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
-    val noidx =
-      s"""(${HtmlExtract.duckMetaDirective("c", "noindex")}
-         |        OR ${HtmlExtract.duckMetaDirective("c", "none")}
-         |        OR ${duckHdrHas("x", "noindex")}
-         |        OR ${duckHdrHas("x", "none")})""".stripMargin
-    s"""WITH ${HtmlExtract.duckEntmapCte},
+  lazy val q183Sql: String =
+    s"""WITH ${graft.text.HtmlExtract.duckEntmapCte},
        |$messyUrlMkCte,
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
-       |hin AS (
-       |  SELECT doc_id, $htmlSqlExpr AS html
-       |  FROM documents
-       |  WHERE doc_id % $TruncMod <> 0 AND doc_id % $NoLenMod <> 0
-       |    AND doc_id % $MagicQuoteMod <> 0),
-       |bh1 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckBaseHref("html"))} AS bh
-       |  FROM hin, entmap),
-       |bri AS (
-       |  SELECT b.doc_id, mk.url AS base, b.bh AS ref
-       |  FROM bh1 b JOIN mk ON b.doc_id = mk.doc_id
-       |  WHERE b.bh IS NOT NULL AND b.bh <> ''
-       |    AND NOT (regexp_matches(b.bh, '$SchemeLike')
-       |             AND NOT regexp_matches(b.bh, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("bri", "doc_id", "eb")},
-       |ebase AS (
-       |  SELECT mk.doc_id, coalesce(eb4.target, mk.url) AS url
-       |  FROM mk LEFT JOIN eb4 ON mk.doc_id = eb4.doc_id),
-       |rf0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckMetaRefreshContent("html")} AS rc
-       |  FROM hin),
-       |rf1 AS (
-       |  SELECT r.doc_id,
-       |    try_cast(regexp_extract(r.rc, '^\\s*([0-9]{1,7})', 1) AS BIGINT)
-       |      AS refresh_secs,
-       |    ${HtmlExtract.duckEntities(
-            "trim(regexp_extract(r.rc, '(?is)[;,]\\s*url\\s*=\\s*(.+)$', 1))")} AS t
-       |  FROM rf0 r, entmap),
-       |tri AS (
-       |  SELECT r.doc_id, e.url AS base, r.t AS ref
-       |  FROM rf1 r JOIN ebase e ON r.doc_id = e.doc_id
-       |  WHERE r.t IS NOT NULL AND r.t <> ''
-       |    AND NOT (regexp_matches(r.t, '$SchemeLike')
-       |             AND NOT regexp_matches(r.t, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("tri", "doc_id", "tv")},
-       |ttin AS (SELECT doc_id, target AS url FROM tv4),
-       |${UrlCanonical.duckCanonCtes("ttin", "doc_id", idn, "tc")},
-       |ch0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckCanonicalHref("html"))} AS ch
-       |  FROM hin, entmap),
-       |cri AS (
-       |  SELECT c.doc_id, e.url AS base, c.ch AS ref
-       |  FROM ch0 c JOIN ebase e ON c.doc_id = e.doc_id
-       |  WHERE c.ch IS NOT NULL AND c.ch <> ''
-       |    AND NOT (regexp_matches(c.ch, '$SchemeLike')
-       |             AND NOT regexp_matches(c.ch, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("cri", "doc_id", "cn")},
-       |ctin AS (SELECT doc_id, target AS url FROM cn4),
-       |${UrlCanonical.duckCanonCtes("ctin", "doc_id", idn, "cx")},
-       |${duckRedirectCtes(idn)},
-       |el0 AS (
-       |  SELECT doc_id, $duckXrtList AS xl FROM hin),
-       |el1 AS (
-       |  SELECT e0.doc_id,
-       |    ${HtmlExtract.duckMetaRobotsContents("h.html")} AS c,
-       |    ${duckXBodies("xl")} AS x
-       |  FROM el0 e0 JOIN hin h ON e0.doc_id = h.doc_id, entmap),
+       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
+       |$chunkHinCte,
+       |${WebGraphOps.duckEbaseCtes},
+       |${WebGraphOps.duckRefreshCtes},
+       |${WebGraphOps.duckCanonicalLinkCtes},
+       |$duckRedirectCtes,
+       |$duckNoindexCtes,
        |cbase AS (
        |  SELECT p.doc_id,
        |    CASE WHEN coalesce(rf.refresh_secs = 0, false)
@@ -1687,17 +1444,16 @@ object CorpusOps {
        |         ELSE p.self_canon END AS consolidation_key
        |  FROM rsp p
        |  JOIN rres r ON p.self_canon = r.node
-       |  JOIN el1 e ON p.doc_id = e.doc_id
+       |  JOIN ni n ON p.doc_id = n.doc_id
        |  LEFT JOIN rf1 rf ON p.doc_id = rf.doc_id
        |  LEFT JOIN tc4 ON p.doc_id = tc4.doc_id
        |  LEFT JOIN cx4 ON p.doc_id = cx4.doc_id
        |  WHERE NOT coalesce(p.status BETWEEN 300 AND 599, false)
        |    AND NOT (r.hops > 0)
-       |    AND NOT $noidx)
+       |    AND NOT n.noindex)
        |SELECT consolidation_key, min(doc_id) AS rep_doc_id,
        |  count(*) AS n_members, count(DISTINCT channel) AS n_channels
        |FROM cbase GROUP BY consolidation_key""".stripMargin
-  }
 
   // ----------------------------- q143 end-to-end curation composition
 
@@ -1936,14 +1692,12 @@ object CorpusOps {
        |    $messyUrlSqlExpr AS url
        |  FROM documents)""".stripMargin
 
-  val q139Sql: String = {
+  val q139Sql: String =
     s"""WITH $messyUrlMkCte,
-       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id",
-          idnVocab = Seq("bücher" -> "xn--bcher-kva"))}
+       |${graft.text.UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn)}
        |SELECT canon AS canonical_url, count(*) AS n_urls,
        |  min(doc_id) AS first_doc
        |FROM u4 GROUP BY canon""".stripMargin
-  }
 
   val queries: Map[String, Q] = Map(
     "q176_redirect_chains" -> q176RedirectChains,
@@ -1974,7 +1728,11 @@ object CorpusOps {
     "q87_fuzzy_terms" -> q87FuzzyTerms,
   )
 
-  val oracles: Map[String, String] = Map(
+  // lazy, like the oracles that compose WebGraphOps's link-signal
+  // builders: WebGraphOps's own oracles read CorpusOps while they are
+  // built, so CorpusOps's constructor must not start WebGraphOps's (a
+  // cycle would hand WebGraphOps half-built CorpusOps vals)
+  lazy val oracles: Map[String, String] = Map(
     "q176_redirect_chains" -> q176Sql,
     "q177_consolidation_key" -> q177Sql,
     "q180_index_eligibility" -> q180Sql,

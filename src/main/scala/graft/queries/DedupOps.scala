@@ -46,6 +46,39 @@ object DedupOps {
        |  FROM toks_t)
        |""".stripMargin
 
+  /** `mh_t (doc_id, <extra>perm, mh)`: the k affine minhashes of each
+    * non-empty shingle set (`sh_t` in scope) — the oracle twin of
+    * Dedup.withMinhashSignature, shared by q41/q42/q46/q49. */
+  private def minhashCte(extra: String = ""): String = {
+    val perms = Dedup.minhashParams(K).zipWithIndex
+      .map { case ((a, b), i) => s"($i, ${a}::BIGINT, ${b}::BIGINT)" }
+      .mkString(", ")
+    s"""mh_t AS (
+       |  SELECT doc_id, ${extra}perm,
+       |    list_min(list_transform(sh,
+       |      s -> (a * (${h60Sql("s")} % $P) + b) % $P)) AS mh
+       |  FROM sh_t CROSS JOIN (VALUES $perms) AS perms(perm, a, b)
+       |  WHERE len(sh) > 0)""".stripMargin
+  }
+
+  /** `sig_t` (ordered signature per doc) and `bands_t (doc_id, band,
+    * bh)`: one UNION ALL arm per LSH band (`mh_t` in scope). */
+  private val bandCtes: String = {
+    val bandArms = (0 until K / RowsPerBand).map { bi =>
+      val terms = (0 until RowsPerBand).map(r => bi * RowsPerBand + r)
+      // mod-BandM Horner over the band's signature entries, exactly
+      // like Dedup.lshBands (bounded — no BIGINT overflow on any layout)
+      val expr = terms.foldLeft("0::BIGINT") { (acc, idx) =>
+        s"((($acc) * ${Dedup.BandA} + sig[${idx + 1}]) % ${Dedup.BandM})"
+      }
+      s"SELECT doc_id, $bi AS band, $expr AS bh FROM sig_t"
+    }.mkString("\nUNION ALL\n")
+    s"""sig_t AS (
+       |  SELECT doc_id, list(mh ORDER BY perm) AS sig FROM mh_t GROUP BY doc_id),
+       |bands_t AS (
+       |$bandArms)""".stripMargin
+  }
+
   // ------------------------------------------------------------ q40 exact
 
   def q40DedupExact(s: SparkSession, dir: String): DataFrame =
@@ -71,25 +104,33 @@ object DedupOps {
       .filter(col("mh").isNotNull)
       .select(col("doc_id"), col("perm").cast("long").as("perm"), col("mh"))
 
-  val q41Sql: String = {
-    val perms = Dedup.minhashParams(K).zipWithIndex
-      .map { case ((a, b), i) => s"($i, ${a}::BIGINT, ${b}::BIGINT)" }
-      .mkString(", ")
-    shingleCte +
-      s"""SELECT doc_id, CAST(perm AS BIGINT) AS perm,
-         |  list_min(list_transform(sh,
-         |    s -> (a * (${h60Sql("s")} % $P) + b) % $P)) AS mh
-         |FROM sh_t CROSS JOIN (VALUES $perms) AS perms(perm, a, b)
-         |WHERE len(sh) > 0""".stripMargin
-  }
+  val q41Sql: String =
+    shingleCte.dropRight(1) + ",\n" + minhashCte() +
+      "\nSELECT doc_id, CAST(perm AS BIGINT) AS perm, mh FROM mh_t"
 
   // ------------------------------------------------------ q42 LSH bands
 
-  def q42LshCandidates(s: SparkSession, dir: String): DataFrame = {
+  def q42LshCandidates(s: SparkSession, dir: String): DataFrame =
+    lshBandPairs(s, Tables.documents(s, dir))(
+      _.groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("shared_bands")))
+
+  /** Test surface (ShardingSpec): q42's distinct
+    * candidate PAIRS (id_a < id_b) over an arbitrary (doc_id, text)
+    * frame — the CC chain's true input, exposed as a frame so harnesses
+    * can measure its size AND assert where the pairs fall (e.g. zero
+    * cross-shard pairs under Sharding.documentsDistinct). */
+  def lshCandidatePairs(s: SparkSession, docsIn: org.apache.spark.sql.DataFrame): DataFrame =
+    lshBandPairs(s, docsIn)(_.select(col("id_a"), col("id_b")).distinct())
+
+  /** q42's signature → band → self-join steps over (doc_id, text): the
+    * band-sharing rows (id_a < id_b, one per shared band), finished by
+    * `finish` and materialized before the cached bands are released. */
+  private def lshBandPairs(s: SparkSession, docsIn: DataFrame)(
+      finish: DataFrame => DataFrame): DataFrame = {
     // Cheap pushable pre-filter (≥ ShingleN tokens ⟺ non-null signature);
     // filtering on element_at(sig, 1) would inline the signature into an
     // interpreted scan Filter (see q41 note).
-    val docs = spread(s, Tables.documents(s, dir))
+    val docs = spread(s, docsIn)
       .filter(size(graft.text.TextAnalysis.tokens(col("text"))) >= ShingleN)
     val sig = Dedup.withMinhashSignature(docs, col("text"), K, ShingleN, "sig")
       .select(col("doc_id"), col("sig"))
@@ -102,61 +143,17 @@ object DedupOps {
     val a = bands.toDF("id_a", "band", "bh")
     val b = bands.toDF("id_b", "band", "bh")
     scope.materializeAndRelease(
-      a.join(b, Seq("band", "bh")).filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("shared_bands")))
+      finish(a.join(b, Seq("band", "bh")).filter(col("id_a") < col("id_b"))))
   }
 
-  /** Test surface (ShardingSpec): q42's distinct
-    * candidate PAIRS (id_a < id_b) over an arbitrary (doc_id, text)
-    * frame — the CC chain's true input, exposed as a frame so harnesses
-    * can measure its size AND assert where the pairs fall (e.g. zero
-    * cross-shard pairs under Sharding.documentsDistinct). */
-  def lshCandidatePairs(s: SparkSession, docsIn: org.apache.spark.sql.DataFrame): DataFrame = {
-    val docs = spread(s, docsIn)
-      .filter(size(graft.text.TextAnalysis.tokens(col("text"))) >= ShingleN)
-    val sig = Dedup.withMinhashSignature(docs, col("text"), K, ShingleN, "sig")
-      .select(col("doc_id"), col("sig"))
-    val scope = graft.CacheScope.scoped()
-    val bands = scope.cache(sig.select(col("doc_id"),
-      posexplode_outer(Dedup.lshBands(col("sig"), K, RowsPerBand)).as(Seq("band", "bh"))))
-    val a = bands.toDF("id_a", "band", "bh")
-    val b = bands.toDF("id_b", "band", "bh")
-    scope.materializeAndRelease(
-      a.join(b, Seq("band", "bh")).filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b")).distinct())
-  }
-
-  val q42Sql: String = {
-    val perms = Dedup.minhashParams(K).zipWithIndex
-      .map { case ((a, b), i) => s"($i, ${a}::BIGINT, ${b}::BIGINT)" }
-      .mkString(", ")
-    val bandArms = (0 until K / RowsPerBand).map { bi =>
-      val terms = (0 until RowsPerBand).map(r => bi * RowsPerBand + r)
-      // mod-BandM Horner over the band's signature entries, exactly
-      // like Dedup.lshBands (bounded — no BIGINT overflow on any layout)
-      val expr = terms.foldLeft("0::BIGINT") { (acc, idx) =>
-        s"((($acc) * ${Dedup.BandA} + sig[${idx + 1}]) % ${Dedup.BandM})"
-      }
-      s"SELECT doc_id, $bi AS band, $expr AS bh FROM sig_t"
-    }.mkString("\nUNION ALL\n")
-    shingleCte.dropRight(1) + "," +
-      s"""
-         |mh_t AS (
-         |  SELECT doc_id, perm,
-         |    list_min(list_transform(sh,
-         |      s -> (a * (${h60Sql("s")} % $P) + b) % $P)) AS mh
-         |  FROM sh_t CROSS JOIN (VALUES $perms) AS perms(perm, a, b)
-         |  WHERE len(sh) > 0),
-         |sig_t AS (
-         |  SELECT doc_id, list(mh ORDER BY perm) AS sig FROM mh_t GROUP BY doc_id),
-         |bands_t AS (
-         |$bandArms)
+  val q42Sql: String =
+    shingleCte.dropRight(1) + ",\n" + minhashCte() + ",\n" + bandCtes +
+      """
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared_bands
          |FROM bands_t a JOIN bands_t b USING (band, bh)
          |WHERE a.doc_id < b.doc_id
          |GROUP BY 1, 2""".stripMargin
-  }
+
 
   // --------------------------------------------------------- q43 jaccard
 
@@ -439,20 +436,12 @@ object DedupOps {
         array_join(col("sig_arr"), ",").as("corpus_sig"), col("n_docs"))
   }
 
-  val q46Sql: String = {
-    val perms = Dedup.minhashParams(K).zipWithIndex
-      .map { case ((a, b), i) => s"($i, ${a}::BIGINT, ${b}::BIGINT)" }
-      .mkString(", ")
+  val q46Sql: String =
     shingleCte.dropRight(1).replace(
         "SELECT doc_id, text,", "SELECT doc_id, source, text,")
-      .replace("SELECT doc_id, toks,", "SELECT doc_id, source, toks,") + "," +
-      s"""
-         |mh_t AS (
-         |  SELECT doc_id, source, perm,
-         |    list_min(list_transform(sh,
-         |      s -> (a * (${h60Sql("s")} % $P) + b) % $P)) AS mh
-         |  FROM sh_t CROSS JOIN (VALUES $perms) AS perms(perm, a, b)
-         |  WHERE len(sh) > 0),
+      .replace("SELECT doc_id, toks,", "SELECT doc_id, source, toks,") +
+      ",\n" + minhashCte("source, ") +
+      """,
          |grp AS (
          |  SELECT source, perm, min(mh) AS mh FROM mh_t GROUP BY source, perm),
          |docs_per_source AS (
@@ -461,7 +450,7 @@ object DedupOps {
          |  array_to_string(list(g.mh ORDER BY g.perm), ',') AS corpus_sig, d.n_docs
          |FROM grp g JOIN docs_per_source d USING (source)
          |GROUP BY g.source, d.n_docs""".stripMargin
-  }
+
 
   // --------------------------------------- q49 incremental dedup vs store
 
@@ -482,30 +471,12 @@ object DedupOps {
         K, RowsPerBand, ShingleN, scope))
   }
 
-  val q49Sql: String = {
-    val perms = Dedup.minhashParams(K).zipWithIndex
-      .map { case ((a, b), i) => s"($i, ${a}::BIGINT, ${b}::BIGINT)" }
-      .mkString(", ")
-    val bandArms = (0 until K / RowsPerBand).map { bi =>
-      val terms = (0 until RowsPerBand).map(r => bi * RowsPerBand + r)
-      val expr = terms.foldLeft("0::BIGINT") { (acc, idx) =>
-        s"((($acc) * ${Dedup.BandA} + sig[${idx + 1}]) % ${Dedup.BandM})"
-      }
-      s"SELECT doc_id, $bi AS band, $expr AS bh FROM sig_t"
-    }.mkString("\nUNION ALL\n")
+  val q49Sql: String =
     shingleCte.dropRight(1) + "," +
       s"""
          |fp_t AS (SELECT doc_id, ${h60Sql("text")} AS fp FROM documents),
-         |mh_t AS (
-         |  SELECT doc_id, perm,
-         |    list_min(list_transform(sh,
-         |      s -> (a * (${h60Sql("s")} % $P) + b) % $P)) AS mh
-         |  FROM sh_t CROSS JOIN (VALUES $perms) AS perms(perm, a, b)
-         |  WHERE len(sh) > 0),
-         |sig_t AS (
-         |  SELECT doc_id, list(mh ORDER BY perm) AS sig FROM mh_t GROUP BY doc_id),
-         |bands_t AS (
-         |$bandArms),
+         |${minhashCte()},
+         |$bandCtes,
          |exact_t AS (
          |  SELECT n.doc_id, min(st.doc_id) AS exact_id
          |  FROM fp_t n JOIN fp_t st ON n.fp = st.fp
@@ -525,7 +496,7 @@ object DedupOps {
          |LEFT JOIN exact_t e ON d.doc_id = e.doc_id
          |LEFT JOIN near_t nr ON d.doc_id = nr.doc_id
          |WHERE d.doc_id % 2 = 1""".stripMargin
-  }
+
 
   // ------------------------------------------------- q39 decontamination
 
@@ -552,6 +523,30 @@ object DedupOps {
        |WHERE doc_id % 41 <> 0
        |GROUP BY doc_id""".stripMargin
 
+  /** The winnow oracle's `pos (doc_id, p, h, len)` (k-gram rolling
+    * hash per position) and `sel (doc_id, s, mk)` (the one-window
+    * selection rule over the combined key h·2²¹ + (2²⁰ − p)), shared
+    * by q107/q108 and the span-removal oracles. */
+  private val winnowCtes: String = {
+    import graft.functions.WinnowFingerprints.{B, M}
+    val K = graft.text.SpanDedup.K
+    val W = graft.text.SpanDedup.W
+    // B^(K−1−i) mod M, i = 0..K−1 — same table the rolling hash folds in
+    val pows = Array.iterate(1L, K)(p => p * B % M).reverse.mkString(", ")
+    s"""pos AS (
+       |  SELECT doc_id, p,
+       |    list_sum(list_transform(range(0, $K), i ->
+       |      (ord(text[p + 1 + i])::BIGINT * ([$pows])[i + 1]) % $M)) % $M AS h,
+       |    length(text) AS len
+       |  FROM documents, LATERAL (SELECT unnest(range(0, length(text) - $K + 1)) AS p)),
+       |sel AS (
+       |  SELECT doc_id, p AS s,
+       |    min(h * 2097152 + (1048576 - p)) OVER (
+       |      PARTITION BY doc_id ORDER BY p
+       |      ROWS BETWEEN CURRENT ROW AND ${W - 1} FOLLOWING) AS mk
+       |  FROM pos QUALIFY s <= len - $K - $W + 1)""".stripMargin
+  }
+
   /** Winnowing span dedup (text.SpanDedup / functions.WinnowFingerprints):
     * pairs of documents sharing ≥ 2 winnow-selected fingerprint hashes
     * (k = 16, w = 8 → any common run of ≥ 23 code points is guaranteed
@@ -566,24 +561,8 @@ object DedupOps {
         scope = scope))
   }
 
-  val q107Sql: String = {
-    import graft.functions.WinnowFingerprints.{B, M}
-    val K = graft.text.SpanDedup.K
-    val W = graft.text.SpanDedup.W
-    // B^(K−1−i) mod M, i = 0..K−1 — same table the rolling hash folds in
-    val pows = Array.iterate(1L, K)(p => p * B % M).reverse.mkString(", ")
-    s"""WITH pos AS (
-       |  SELECT doc_id, p,
-       |    list_sum(list_transform(range(0, $K), i ->
-       |      (ord(text[p + 1 + i])::BIGINT * ([$pows])[i + 1]) % $M)) % $M AS h,
-       |    length(text) AS len
-       |  FROM documents, LATERAL (SELECT unnest(range(0, length(text) - $K + 1)) AS p)),
-       |sel AS (
-       |  SELECT doc_id, p AS s,
-       |    min(h * 2097152 + (1048576 - p)) OVER (
-       |      PARTITION BY doc_id ORDER BY p
-       |      ROWS BETWEEN CURRENT ROW AND ${W - 1} FOLLOWING) AS mk
-       |  FROM pos QUALIFY s <= len - $K - $W + 1),
+  val q107Sql: String =
+    s"""WITH $winnowCtes,
        |fph AS (SELECT DISTINCT doc_id, mk // 2097152 AS h FROM sel),
        |keep AS (SELECT h FROM fph GROUP BY h HAVING count(*) <= 64),
        |c AS (SELECT doc_id, h FROM fph JOIN keep USING (h)),
@@ -592,7 +571,7 @@ object DedupOps {
        |  FROM c a JOIN c b ON a.h = b.h AND a.doc_id < b.doc_id
        |  GROUP BY 1, 2)
        |SELECT id_a, id_b, n_common FROM pairs WHERE n_common >= 2""".stripMargin
-  }
+
 
   /** Per-document span-duplication score (text.SpanDedup.spanDupStats):
     * the linear, cap-free filterable form — df per fingerprint hash is
@@ -605,23 +584,8 @@ object DedupOps {
         scope = scope))
   }
 
-  val q108Sql: String = {
-    import graft.functions.WinnowFingerprints.{B, M}
-    val K = graft.text.SpanDedup.K
-    val W = graft.text.SpanDedup.W
-    val pows = Array.iterate(1L, K)(p => p * B % M).reverse.mkString(", ")
-    s"""WITH pos AS (
-       |  SELECT doc_id, p,
-       |    list_sum(list_transform(range(0, $K), i ->
-       |      (ord(text[p + 1 + i])::BIGINT * ([$pows])[i + 1]) % $M)) % $M AS h,
-       |    length(text) AS len
-       |  FROM documents, LATERAL (SELECT unnest(range(0, length(text) - $K + 1)) AS p)),
-       |sel AS (
-       |  SELECT doc_id, p AS s,
-       |    min(h * 2097152 + (1048576 - p)) OVER (
-       |      PARTITION BY doc_id ORDER BY p
-       |      ROWS BETWEEN CURRENT ROW AND ${W - 1} FOLLOWING) AS mk
-       |  FROM pos QUALIFY s <= len - $K - $W + 1),
+  val q108Sql: String =
+    s"""WITH $winnowCtes,
        |fph AS (SELECT DISTINCT doc_id, mk // 2097152 AS h FROM sel),
        |dft AS (SELECT h, count(*) AS df FROM fph GROUP BY h)
        |SELECT doc_id, count(*) AS n_fp,
@@ -629,7 +593,7 @@ object DedupOps {
        |  (sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END)::BIGINT * 10000) // count(*) AS dup_bp
        |FROM fph JOIN dft USING (h)
        |GROUP BY doc_id""".stripMargin
-  }
+
 
   /** Span REMOVAL (text.SpanDedup.removeSharedSpans): the cleaned
     * document itself — shared fingerprint spans excised everywhere but
@@ -653,30 +617,15 @@ object DedupOps {
     * reassembly — ONE place, mirroring SpanDedup.mergeIntervals +
     * assembleClean exactly. `docPredicate` scopes which documents are
     * cleaned/emitted (q122 restricts to the non-benchmark slice). */
-  private def spanRemovalSql(rmCtes: String, docPredicate: Option[String]): String = {
-    import graft.functions.WinnowFingerprints.{B, M}
-    val K = graft.text.SpanDedup.K
-    val W = graft.text.SpanDedup.W
-    val pows = Array.iterate(1L, K)(p => p * B % M).reverse.mkString(", ")
+  private def spanRemovalSql(rmCtes: String, docPredicate: Option[String]): String =
     spanExcisionSql(
-      s"""pos AS (
-       |  SELECT doc_id, p,
-       |    list_sum(list_transform(range(0, $K), i ->
-       |      (ord(text[p + 1 + i])::BIGINT * ([$pows])[i + 1]) % $M)) % $M AS h,
-       |    length(text) AS len
-       |  FROM documents, LATERAL (SELECT unnest(range(0, length(text) - $K + 1)) AS p)),
-       |sel AS (
-       |  SELECT doc_id, p AS s,
-       |    min(h * 2097152 + (1048576 - p)) OVER (
-       |      PARTITION BY doc_id ORDER BY p
-       |      ROWS BETWEEN CURRENT ROW AND ${W - 1} FOLLOWING) AS mk
-       |  FROM pos QUALIFY s <= len - $K - $W + 1),
+      s"""$winnowCtes,
        |fpos AS (
        |  SELECT DISTINCT doc_id, mk // 2097152 AS h,
        |    1048576 - (mk % 2097152) AS p
        |  FROM sel)""".stripMargin,
       rmCtes, docPredicate)
-  }
+
 
   /** The removal-trigger-agnostic half of the span-excision oracle:
     * caller-supplied prefix CTEs (how spans are found) + a CTE section

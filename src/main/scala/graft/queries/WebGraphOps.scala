@@ -8,6 +8,8 @@ import graft.functions.Portable
 import graft.operators.PageRank
 import graft.text.{HtmlExtract, UrlCanonical}
 
+import CorpusOps.DuckIdn
+
 /** The crawl-graph chain (VERDICT r15 next #1/#2): outlink extraction
   * from WARC HTML payloads, RFC 3986 §5 relative-reference resolution
   * against each page's URL, canonicalization of both endpoints — and
@@ -34,11 +36,6 @@ object WebGraphOps {
   private val SchemeLike = "^[A-Za-z][A-Za-z0-9+.\\-]*:"
   private val Hierarchical = "^[A-Za-z][A-Za-z0-9+.\\-]*://"
 
-  /** The outlink-edge relation over the per-dir HTML WARC zone:
-    * (doc_id, link_idx, href, src_canon, dst_canon). `link_idx` is the
-    * href's position among ALL extracted targets (pre-screen, so
-    * indices are stable); `href` is the entity-DECODED attribute value
-    * (what a browser resolves); both endpoints are canonical. */
   /** The WARC HTML pages with their RESOLUTION BASE attached — RFC 3986
     * §5.1's precedence (VERDICT r17 weak #1): an embedded `<base href>`
     * comes FIRST, the retrieval URI is the fallback. The base href is
@@ -52,7 +49,11 @@ object WebGraphOps {
     * order of operations. `__url` stays the retrieval URI (the SOURCE
     * endpoint — a base changes where links point, not where the page
     * lives); `__base` is the effective resolution base. */
-  private def pagesWithBase(s: SparkSession, dir: String): DataFrame = {
+  private def pagesWithBase(s: SparkSession, dir: String): DataFrame =
+    withBase(htmlPages(s, dir))
+
+  /** The WARC HTML pages: (doc_id, payload, __url). */
+  private[queries] def htmlPages(s: SparkSession, dir: String): DataFrame = {
     val zone = CorpusOps.htmlZoneFor(s, dir)
     graft.sources.Warc.readExactClean(s, zone)
       .select(
@@ -60,10 +61,12 @@ object WebGraphOps {
         col("payload"))
       .select(col("doc_id"), col("payload"),
         CorpusOps.messyUrlCol.as("__url"))
-      .withColumn("__base",
-        effectiveBase(col("__url"),
-          HtmlExtract.baseHref(col("payload"))))
   }
+
+  /** Attach `__base` to a page frame carrying `payload` and `__url`. */
+  private def withBase(pages: DataFrame): DataFrame =
+    pages.withColumn("__base",
+      effectiveBase(col("__url"), HtmlExtract.baseHref(col("payload"))))
 
   /** `coalesce`-style §5.1.1 base selection, LET-BOUND so the decoded
     * base-href subtree is built once, not once per predicate (Column
@@ -71,16 +74,57 @@ object WebGraphOps {
   private def effectiveBase(url: Column, rawBase: Column): Column =
     UrlCanonical.let(HtmlExtract.decodeEntities(rawBase)) { bh =>
       UrlCanonical.let(url) { u =>
-        when(bh.isNull || bh === "" ||
-            (bh.rlike(SchemeLike) && !bh.rlike(Hierarchical)), u)
-          .otherwise(UrlCanonical.resolve(u, bh))
+        when(unusableRef(bh), u).otherwise(UrlCanonical.resolve(u, bh))
       }
     }
 
-  /** Keep only crawlable references: not a non-hierarchical scheme. */
-  private def hierarchicalOnly(href: Column): Column =
-    !(href.rlike(SchemeLike) && !href.rlike(Hierarchical))
+  /** A reference that names no crawlable target: null, empty, or a
+    * non-hierarchical scheme. */
+  private def unusableRef(r: Column): Column =
+    r.isNull || r === "" || nonHierarchical(r)
 
+  private def nonHierarchical(r: Column): Column =
+    r.rlike(SchemeLike) && !r.rlike(Hierarchical)
+
+  /** Keep only crawlable references: not a non-hierarchical scheme. */
+  private def hierarchicalOnly(href: Column): Column = !nonHierarchical(href)
+
+  /** A page-level link signal's target (`<meta refresh>` URL,
+    * `<link rel=canonical>`): null when the decoded reference is
+    * unusable, else resolved against `base` and canonicalized. The
+    * reference is let-bound once. */
+  private def canonTarget(base: Column, ref: Column): Column =
+    UrlCanonical.let(ref) { t =>
+      when(unusableRef(t), lit(null))
+        .otherwise(UrlCanonical.canonicalize(UrlCanonical.resolve(base, t)))
+    }
+
+  /** The page's link signals, added to a frame carrying `payload` and
+    * `__url`: `__base` (§5.1.1), `refresh_secs` and the canonical
+    * meta-refresh target (named `refreshAs`), and `__cc`, the canonical
+    * `<link rel=canonical>` target. The meta-refresh content parses
+    * into a leading delay and a `url=` target; the target is
+    * entity-decoded, as is the canonical href. */
+  private[queries] def withLinkSignals(pages: DataFrame,
+                                       refreshAs: String): DataFrame =
+    withBase(pages)
+      .withColumn("__rc", HtmlExtract.metaRefreshContent(col("payload")))
+      // extract with the Column API, cast via expr on the extracted
+      // column — regex literals inside expr() hit SQL string escaping
+      .withColumn("__secs", regexp_extract(col("__rc"), "^\\s*([0-9]{1,7})", 1))
+      .withColumn("refresh_secs", expr("try_cast(__secs AS BIGINT)"))
+      .withColumn("__t", HtmlExtract.decodeEntities(trim(
+        regexp_extract(col("__rc"), "(?is)[;,]\\s*url\\s*=\\s*(.+)$", 1))))
+      .withColumn(refreshAs, canonTarget(col("__base"), col("__t")))
+      .withColumn("__ch",
+        HtmlExtract.decodeEntities(HtmlExtract.canonicalHref(col("payload"))))
+      .withColumn("__cc", canonTarget(col("__base"), col("__ch")))
+
+  /** The outlink-edge relation over the per-dir HTML WARC zone:
+    * (doc_id, link_idx, href, src_canon, dst_canon). `link_idx` is the
+    * href's position among ALL extracted targets (pre-screen, so
+    * indices are stable); `href` is the entity-DECODED attribute value
+    * (what a browser resolves); both endpoints are canonical. */
   private[queries] def outlinkEdges(s: SparkSession, dir: String): DataFrame =
     pagesWithBase(s, dir)
       .select(col("doc_id"), col("__base"),
@@ -144,7 +188,7 @@ object WebGraphOps {
       UrlCanonical.duckHostOf("coalesce(m.final_canon, d4.canon)")
     val hostSrc = UrlCanonical.duckHostOf("s4.canon")
     s"""WITH $outlinkCtePrefix,
-       |${CorpusOps.duckRedirectCtes(Seq("bücher" -> "xn--bcher-kva"))},
+       |${CorpusOps.duckRedirectCtes},
        |rmap AS (
        |  SELECT node, final_canon FROM rres
        |  WHERE hops > 0 AND NOT is_loop AND settled)
@@ -298,8 +342,7 @@ object WebGraphOps {
   /** The q155 CTE chain WITHOUT the leading WITH/final SELECT —
     * exposes `af (doc_id, link_idx, href, anchor_text)` and
     * `d4 (doc_id, link_idx, canon)`; shared by q155 and q178. */
-  private def anchorCtePrefix: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  private def anchorCtePrefix: String =
     s"""${HtmlExtract.duckEntmapCte},
        |${CorpusOps.htmlInCtes},
        |${CorpusOps.messyUrlMkCte},
@@ -315,15 +358,13 @@ object WebGraphOps {
        |      ${HtmlExtract.duckEntities(HtmlExtract.duckAnchorHref("a"))} AS href,
        |      ${HtmlExtract.duckAnchorText("a")} AS anchor_text
        |    FROM ax, entmap)
-       |  WHERE NOT (regexp_matches(href, '$SchemeLike')
-       |             AND NOT regexp_matches(href, '$Hierarchical'))),
+       |  WHERE ${duckHierarchical("href")}),
        |rin AS (
        |  SELECT af.doc_id, af.link_idx, e.url AS base, af.href AS ref
        |  FROM af JOIN ebase e ON af.doc_id = e.doc_id),
        |${UrlCanonical.duckResolveCtes("rin", "doc_id, link_idx", "rv")},
        |tin AS (SELECT doc_id, link_idx, target AS url FROM rv4),
-       |${UrlCanonical.duckCanonCtes("tin", "doc_id, link_idx", idn, "d")}""".stripMargin
-  }
+       |${UrlCanonical.duckCanonCtes("tin", "doc_id, link_idx", DuckIdn, "d")}""".stripMargin
 
   val q155Sql: String =
     s"""WITH $anchorCtePrefix
@@ -418,8 +459,7 @@ object WebGraphOps {
         UrlCanonical.canonicalize(
           UrlCanonical.resolve(col("__base"), col("href"))).as("dst_canon"))
 
-  val q169Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  val q169Sql: String =
     s"""WITH ${HtmlExtract.duckEntmapCte},
        |${CorpusOps.htmlInCtes},
        |${CorpusOps.messyUrlMkCte},
@@ -436,18 +476,16 @@ object WebGraphOps {
        |      lower(${HtmlExtract.duckTagRel("t")}) AS rel,
        |      ${HtmlExtract.duckRelHasNofollow(HtmlExtract.duckTagRel("t"))} AS nofollow
        |    FROM tx, entmap)
-       |  WHERE NOT (regexp_matches(href, '$SchemeLike')
-       |             AND NOT regexp_matches(href, '$Hierarchical'))),
+       |  WHERE ${duckHierarchical("href")}),
        |rin AS (
        |  SELECT tf.doc_id, tf.tag_idx, e.url AS base, tf.href AS ref
        |  FROM tf JOIN ebase e ON tf.doc_id = e.doc_id),
        |${UrlCanonical.duckResolveCtes("rin", "doc_id, tag_idx", "rv")},
        |tin AS (SELECT doc_id, tag_idx, target AS url FROM rv4),
-       |${UrlCanonical.duckCanonCtes("tin", "doc_id, tag_idx", idn, "d")}
+       |${UrlCanonical.duckCanonCtes("tin", "doc_id, tag_idx", DuckIdn, "d")}
        |SELECT tf.doc_id, tf.tag_idx, tf.href, tf.rel, tf.nofollow,
        |  d4.canon AS dst_canon
        |FROM tf JOIN d4 ON tf.doc_id = d4.doc_id AND tf.tag_idx = d4.tag_idx""".stripMargin
-  }
 
   // ------------------------------------ q171 followed host-edge relation
 
@@ -492,8 +530,7 @@ object WebGraphOps {
 
   /** The q171 chain as CTEs → exposes `fe (src_host, dst_host)` —
     * shared by q171's gate SELECT and q173's rank sweep. */
-  private def followedEdgeCtes: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  private def followedEdgeCtes: String =
     s"""${HtmlExtract.duckEntmapCte},
        |${CorpusOps.htmlInCtes},
        |${CorpusOps.messyUrlMkCte},
@@ -516,8 +553,7 @@ object WebGraphOps {
        |      ${HtmlExtract.duckEntities(HtmlExtract.duckTagHref("t"))} AS href,
        |      ${HtmlExtract.duckRelHasNofollow(HtmlExtract.duckTagRel("t"))} AS nofollow
        |    FROM tx, entmap)
-       |  WHERE NOT (regexp_matches(href, '$SchemeLike')
-       |             AND NOT regexp_matches(href, '$Hierarchical'))),
+       |  WHERE ${duckHierarchical("href")}),
        |ff AS (
        |  SELECT tf.doc_id, tf.tag_idx, tf.href
        |  FROM tf JOIN pnf ON tf.doc_id = pnf.doc_id
@@ -527,15 +563,14 @@ object WebGraphOps {
        |  FROM ff JOIN ebase e ON ff.doc_id = e.doc_id),
        |${UrlCanonical.duckResolveCtes("rin", "doc_id, tag_idx", "rv")},
        |tin AS (SELECT doc_id, tag_idx, target AS url FROM rv4),
-       |${UrlCanonical.duckCanonCtes("tin", "doc_id, tag_idx", idn, "d")},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
+       |${UrlCanonical.duckCanonCtes("tin", "doc_id, tag_idx", DuckIdn, "d")},
+       |${UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
        |fe AS (
        |  SELECT DISTINCT ${UrlCanonical.duckHostOf("s4.canon")} AS src_host,
        |    ${UrlCanonical.duckHostOf("d4.canon")} AS dst_host
        |  FROM d4 JOIN s4 ON d4.doc_id = s4.doc_id
        |  WHERE ${UrlCanonical.duckHostOf("s4.canon")}
        |        <> ${UrlCanonical.duckHostOf("d4.canon")})""".stripMargin
-  }
 
   val q171Sql: String =
     s"WITH $followedEdgeCtes\nSELECT src_host, dst_host FROM fe"
@@ -589,8 +624,7 @@ object WebGraphOps {
         UrlCanonical.canonicalize(
           UrlCanonical.resolve(col("__base"), col("href"))).as("alt_canon"))
 
-  val q182Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  val q182Sql: String =
     s"""WITH ${HtmlExtract.duckEntmapCte},
        |${CorpusOps.htmlInCtes},
        |${CorpusOps.messyUrlMkCte},
@@ -607,20 +641,17 @@ object WebGraphOps {
        |      ${HtmlExtract.duckLinkHreflang("t")} AS hreflang,
        |      ${HtmlExtract.duckEntities(HtmlExtract.duckLinkHref("t"))} AS href
        |    FROM hx2, entmap)
-       |  WHERE href <> ''
-       |    AND NOT (regexp_matches(href, '$SchemeLike')
-       |             AND NOT regexp_matches(href, '$Hierarchical'))),
+       |  WHERE href <> '' AND ${duckHierarchical("href")}),
        |rin AS (
        |  SELECT hf2.doc_id, hf2.alt_idx, e.url AS base, hf2.href AS ref
        |  FROM hf2 JOIN ebase e ON hf2.doc_id = e.doc_id),
        |${UrlCanonical.duckResolveCtes("rin", "doc_id, alt_idx", "rv")},
        |tin AS (SELECT doc_id, alt_idx, target AS url FROM rv4),
-       |${UrlCanonical.duckCanonCtes("tin", "doc_id, alt_idx", idn, "d")}
+       |${UrlCanonical.duckCanonCtes("tin", "doc_id, alt_idx", DuckIdn, "d")}
        |SELECT hf2.doc_id, hf2.alt_idx, hf2.hreflang, hf2.href,
        |  d4.canon AS alt_canon
        |FROM hf2 JOIN d4 ON hf2.doc_id = d4.doc_id
        |                AND hf2.alt_idx = d4.alt_idx""".stripMargin
-  }
 
   // --------------------------------- q172 canonical-link consolidation
 
@@ -643,45 +674,25 @@ object WebGraphOps {
         HtmlExtract.decodeEntities(HtmlExtract.canonicalHref(col("payload"))))
       .select(col("doc_id"),
         UrlCanonical.canonicalize(col("__url")).as("self_canon"),
-        UrlCanonical.let(col("__ch")) { ch =>
-          when(ch.isNull || ch === "" ||
-              (ch.rlike(SchemeLike) && !ch.rlike(Hierarchical)),
-            lit(null))
-            .otherwise(UrlCanonical.canonicalize(
-              UrlCanonical.resolve(col("__base"), ch)))
-        }.as("canonical_canon"))
+        canonTarget(col("__base"), col("__ch")).as("canonical_canon"))
       .withColumn("is_self",
         coalesce(col("canonical_canon") === col("self_canon"), lit(false)))
       .withColumn("dedup_key",
         coalesce(col("canonical_canon"), col("self_canon")))
 
-  val q172Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  val q172Sql: String =
     s"""WITH ${HtmlExtract.duckEntmapCte},
        |${CorpusOps.htmlInCtes},
        |${CorpusOps.messyUrlMkCte},
        |$duckEbaseCtes,
-       |ch0 AS (
-       |  SELECT doc_id,
-       |    ${HtmlExtract.duckEntities(HtmlExtract.duckCanonicalHref("html"))} AS ch
-       |  FROM hin, entmap),
-       |cri AS (
-       |  SELECT c.doc_id, e.url AS base, c.ch AS ref
-       |  FROM ch0 c JOIN ebase e ON c.doc_id = e.doc_id
-       |  WHERE c.ch IS NOT NULL AND c.ch <> ''
-       |    AND NOT (regexp_matches(c.ch, '$SchemeLike')
-       |             AND NOT regexp_matches(c.ch, '$Hierarchical'))),
-       |${UrlCanonical.duckResolveCtes("cri", "doc_id", "cn")},
-       |ctin AS (SELECT doc_id, target AS url FROM cn4),
-       |${UrlCanonical.duckCanonCtes("ctin", "doc_id", idn, "cx")},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")}
+       |$duckCanonicalLinkCtes,
+       |${UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")}
        |SELECT h.doc_id, s4.canon AS self_canon, cx4.canon AS canonical_canon,
        |  coalesce(cx4.canon = s4.canon, false) AS is_self,
        |  coalesce(cx4.canon, s4.canon) AS dedup_key
        |FROM hin h
        |JOIN s4 ON h.doc_id = s4.doc_id
        |LEFT JOIN cx4 ON h.doc_id = cx4.doc_id""".stripMargin
-  }
 
   // --------------------------------------- q156 rank-weighted host quota
 
@@ -785,12 +796,22 @@ object WebGraphOps {
        |  (rt.rn <= qa.quota) AS kept
        |FROM rt JOIN qa USING (host)""".stripMargin
 
+  /** DuckDB twin of [[hierarchicalOnly]] over the SQL expression `r`. */
+  private def duckHierarchical(r: String): String =
+    s"""NOT (regexp_matches($r, '$SchemeLike')
+       |             AND NOT regexp_matches($r, '$Hierarchical'))""".stripMargin
+
+  /** DuckDB twin of `NOT` [[unusableRef]]. */
+  private def duckUsable(r: String): String =
+    s"$r IS NOT NULL AND $r <> ''\n    AND ${duckHierarchical(r)}"
+
   /** The effective-base CTE chain (RFC 3986 §5.1.1, mirrored from
     * [[pagesWithBase]]): first `<base href>` decoded; usable ones
     * (non-empty, hierarchical) resolved against the retrieval URI;
     * `ebase (doc_id, url)` = the resolution base per doc. Assumes
-    * `entmap`, `hin`, and `mk` are in scope. */
-  private def duckEbaseCtes: String =
+    * `entmap`, `hin`, and `mk` are in scope, as do the signal builders
+    * below (which also need `ebase`). */
+  private[queries] def duckEbaseCtes: String =
     s"""bh1 AS (
        |  SELECT doc_id,
        |    ${HtmlExtract.duckEntities(HtmlExtract.duckBaseHref("html"))} AS bh
@@ -798,18 +819,53 @@ object WebGraphOps {
        |bri AS (
        |  SELECT b.doc_id, mk.url AS base, b.bh AS ref
        |  FROM bh1 b JOIN mk ON b.doc_id = mk.doc_id
-       |  WHERE b.bh IS NOT NULL AND b.bh <> ''
-       |    AND NOT (regexp_matches(b.bh, '$SchemeLike')
-       |             AND NOT regexp_matches(b.bh, '$Hierarchical'))),
+       |  WHERE ${duckUsable("b.bh")}),
        |${UrlCanonical.duckResolveCtes("bri", "doc_id", "eb")},
        |ebase AS (
        |  SELECT mk.doc_id, coalesce(eb4.target, mk.url) AS url
        |  FROM mk LEFT JOIN eb4 ON mk.doc_id = eb4.doc_id)""".stripMargin
 
+  /** DuckDB twin of [[canonTarget]]: the usable references of
+    * `in (doc_id, ref)` resolved against `ebase` and canonicalized —
+    * exposes `${p}4 (doc_id, canon)`. */
+  private def duckCanonTargetCtes(in: String, p: String): String =
+    s"""${p}ri AS (
+       |  SELECT r.doc_id, e.url AS base, r.ref
+       |  FROM $in r JOIN ebase e ON r.doc_id = e.doc_id
+       |  WHERE ${duckUsable("r.ref")}),
+       |${UrlCanonical.duckResolveCtes(s"${p}ri", "doc_id", s"${p}v")},
+       |${p}in AS (SELECT doc_id, target AS url FROM ${p}v4),
+       |${UrlCanonical.duckCanonCtes(s"${p}in", "doc_id", DuckIdn, p)}""".stripMargin
+
+  /** The meta-refresh signal of [[withLinkSignals]]:
+    * `rf1 (doc_id, refresh_secs, ref)` and the canonical target
+    * `tc4 (doc_id, canon)`. */
+  private[queries] def duckRefreshCtes: String =
+    s"""rf0 AS (
+       |  SELECT doc_id,
+       |    ${HtmlExtract.duckMetaRefreshContent("html")} AS rc
+       |  FROM hin),
+       |rf1 AS (
+       |  SELECT r.doc_id,
+       |    try_cast(regexp_extract(r.rc, '^\\s*([0-9]{1,7})', 1) AS BIGINT)
+       |      AS refresh_secs,
+       |    ${HtmlExtract.duckEntities(
+            "trim(regexp_extract(r.rc, '(?is)[;,]\\s*url\\s*=\\s*(.+)$', 1))")} AS ref
+       |  FROM rf0 r, entmap),
+       |${duckCanonTargetCtes("rf1", "tc")}""".stripMargin
+
+  /** The `<link rel=canonical>` signal of [[withLinkSignals]]:
+    * `cx4 (doc_id, canon)`. */
+  private[queries] def duckCanonicalLinkCtes: String =
+    s"""ch0 AS (
+       |  SELECT doc_id,
+       |    ${HtmlExtract.duckEntities(HtmlExtract.duckCanonicalHref("html"))} AS ref
+       |  FROM hin, entmap),
+       |${duckCanonTargetCtes("ch0", "cx")}""".stripMargin
+
   /** The q150 CTE chain WITHOUT the leading WITH/final SELECT — the
     * reusable prefix q151 builds on. */
-  private def outlinkCtePrefix: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  private def outlinkCtePrefix: String =
     s"""${HtmlExtract.duckEntmapCte},
        |${CorpusOps.htmlInCtes},
        |${CorpusOps.messyUrlMkCte},
@@ -824,16 +880,14 @@ object WebGraphOps {
        |    SELECT doc_id, link_idx,
        |      ${HtmlExtract.duckEntities("rawref")} AS href
        |    FROM lx, entmap)
-       |  WHERE NOT (regexp_matches(href, '$SchemeLike')
-       |             AND NOT regexp_matches(href, '$Hierarchical'))),
+       |  WHERE ${duckHierarchical("href")}),
        |rin AS (
        |  SELECT lf.doc_id, lf.link_idx, e.url AS base, lf.href AS ref
        |  FROM lf JOIN ebase e ON lf.doc_id = e.doc_id),
        |${UrlCanonical.duckResolveCtes("rin", "doc_id, link_idx", "rv")},
        |tin AS (SELECT doc_id, link_idx, target AS url FROM rv4),
-       |${UrlCanonical.duckCanonCtes("tin", "doc_id, link_idx", idn, "d")},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")}""".stripMargin
-  }
+       |${UrlCanonical.duckCanonCtes("tin", "doc_id, link_idx", DuckIdn, "d")},
+       |${UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")}""".stripMargin
 
   // ---------------------------------------------- q158 robots gate
 
@@ -918,10 +972,9 @@ object WebGraphOps {
       .map(l => "'" + l.replace("'", "''") + "'")
       .mkString(" || chr(10) || ")
 
-  val q158Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  val q158Sql: String =
     s"""WITH ${CorpusOps.messyUrlMkCte},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
+       |${UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
        |dh AS (
        |  SELECT doc_id, ${UrlCanonical.duckHostOf("canon")} AS host,
        |    ${UrlCanonical.duckPathQueryOf("canon")} AS path,
@@ -933,7 +986,6 @@ object WebGraphOps {
        |  FROM (SELECT DISTINCT host, par FROM dh)),
        |${graft.text.Robots.duckRobotsCtes("rt", "dh", RobotsAgent)}
        |SELECT doc_id, host, path, allowed, rule, rule_path FROM rb_out""".stripMargin
-  }
 
   // -------------------------------------------- q159 sitemap frontier
 
@@ -974,11 +1026,10 @@ object WebGraphOps {
         coalesce(col("__in"), lit(false)).as("in_corpus"))
   }
 
-  val q159Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  val q159Sql: String =
     s"""WITH ${graft.text.HtmlExtract.duckEntmapCte},
        |${CorpusOps.messyUrlMkCte},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
+       |${UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
        |dh AS (
        |  SELECT doc_id, canon, ${UrlCanonical.duckHostOf("canon")} AS host
        |  FROM s4),
@@ -998,12 +1049,11 @@ object WebGraphOps {
        |  SELECT host, loc_idx,
        |    ${graft.text.HtmlExtract.duckEntities("rawloc")} AS url
        |  FROM lx, entmap),
-       |${UrlCanonical.duckCanonCtes("ld", "host, loc_idx", idn, "d")},
+       |${UrlCanonical.duckCanonCtes("ld", "host, loc_idx", DuckIdn, "d")},
        |cc AS (SELECT DISTINCT canon FROM dh)
        |SELECT d4.host, d4.loc_idx, d4.canon AS loc_canon,
        |  (cc.canon IS NOT NULL) AS in_corpus
        |FROM d4 LEFT JOIN cc ON d4.canon = cc.canon""".stripMargin
-  }
 
   // ------------------------------- q160 ZONE-sourced robots gate (r17)
 
@@ -1257,14 +1307,13 @@ object WebGraphOps {
   }
 
   val q160Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
     // effective rules after §2.3.1: host 5 (corrupt) and host 7 (404)
     // contribute NO rules (default-allow falls out of the left join);
     // host 11's rules are OddRobots — the redirect target's body, which
     // equals what a direct fetch would have served; host 9 (503) is
     // overridden to the complete disallow AFTER evaluation
     s"""WITH ${CorpusOps.messyUrlMkCte},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
+       |${UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
        |dh AS (
        |  SELECT doc_id, ${UrlCanonical.duckHostOf("canon")} AS host,
        |    ${UrlCanonical.duckPathQueryOf("canon")} AS path
@@ -1497,7 +1546,7 @@ object WebGraphOps {
     * child refs (k DESC document order) → per-child entry relation
     * `sce (n, host, sm_idx, k, u)` where `u` is one raw `<url>`
     * fragment with its `loc_idx`. */
-  private def sitemapCtes: String = {
+  private def sitemapCtes: String =
     s"""smd AS (
        |  SELECT doc_id, canon, doc_id % 13 AS n, doc_id % $SmChildren AS k,
        |    $lastmodSql AS lm, $changefreqSql AS cf, $prioritySql AS py
@@ -1530,25 +1579,22 @@ object WebGraphOps {
        |    SELECT x.n, x.host, x.sm_idx, x.k,
        |      ${graft.text.Sitemaps.duckUrlEntries("b.cxml")} AS ul
        |    FROM sxr x JOIN smb b USING (n, k)))""".stripMargin
-  }
 
-  val q161Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  val q161Sql: String =
     s"""WITH ${graft.text.HtmlExtract.duckEntmapCte},
        |${CorpusOps.messyUrlMkCte},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
+       |${UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
        |$sitemapCtes,
        |sld AS (
        |  SELECT n, host, sm_idx, k, loc_idx,
        |    ${graft.text.HtmlExtract.duckEntities(
               graft.text.Sitemaps.duckEntryLoc("u"))} AS url
        |  FROM sce, entmap),
-       |${UrlCanonical.duckCanonCtes("sld", "host, sm_idx, k, loc_idx", idn, "sc")},
+       |${UrlCanonical.duckCanonCtes("sld", "host, sm_idx, k, loc_idx", DuckIdn, "sc")},
        |cc AS (SELECT DISTINCT canon FROM s4)
        |SELECT sc4.host, sc4.sm_idx, sc4.k, sc4.loc_idx,
        |  sc4.canon AS loc_canon, (cc.canon IS NOT NULL) AS in_corpus
        |FROM sc4 LEFT JOIN cc ON sc4.canon = cc.canon""".stripMargin
-  }
 
   /** q162: the RECRAWL-PRIORITY frontier (VERDICT r16 next #4) — every
     * child-sitemap entry with its `<lastmod>`, ranked per host by
@@ -1573,11 +1619,10 @@ object WebGraphOps {
         col("stale_rank"))
   }
 
-  val q162Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  val q162Sql: String =
     s"""WITH ${graft.text.HtmlExtract.duckEntmapCte},
        |${CorpusOps.messyUrlMkCte},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
+       |${UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
        |$sitemapCtes,
        |sle AS (
        |  SELECT n, host, sm_idx, k, loc_idx,
@@ -1589,7 +1634,7 @@ object WebGraphOps {
        |  FROM sce, entmap),
        |${UrlCanonical.duckCanonCtes("sle",
           "host, sm_idx, k, loc_idx, lastmod_raw, changefreq, priority_milli",
-          idn, "sc")},
+          DuckIdn, "sc")},
        |sp AS (
        |  SELECT host, k, loc_idx, canon AS loc_canon, lastmod_raw,
        |    changefreq, priority_milli,
@@ -1601,7 +1646,6 @@ object WebGraphOps {
        |    ORDER BY d ASC NULLS FIRST, loc_canon, k, loc_idx) AS BIGINT)
        |    AS stale_rank
        |FROM sp""".stripMargin
-  }
 
   // -------------- q164 robots 'Sitemap:' discovery (r17, beyond plan)
 
@@ -1625,7 +1669,6 @@ object WebGraphOps {
   }
 
   val q164Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
     // hosts 5 (corrupt), 7 (404), 9 (503) discover nothing — their
     // poison Sitemap lines must never surface; host 11 discovers
     // through its redirect target, whose lines equal the direct shape
@@ -1644,7 +1687,7 @@ object WebGraphOps {
        |${graft.text.Robots.duckSitemapsCtes("rt")},
        |smu AS (SELECT host, sm_idx, sitemap_url,
        |          sitemap_url AS url FROM rb_sm),
-       |${UrlCanonical.duckCanonCtes("smu", "host, sm_idx, sitemap_url", idn, "sm")}
+       |${UrlCanonical.duckCanonCtes("smu", "host, sm_idx, sitemap_url", DuckIdn, "sm")}
        |SELECT host, sm_idx, sitemap_url, canon AS sitemap_canon FROM sm4""".stripMargin
   }
 
@@ -1729,11 +1772,10 @@ object WebGraphOps {
         expr("(crawl_rank - 1) div rate").as("slot"))
   }
 
-  val q165Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
+  val q165Sql: String =
     s"""WITH ${graft.text.HtmlExtract.duckEntmapCte},
        |${CorpusOps.messyUrlMkCte},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
+       |${UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
        |$sitemapCtes,
        |sle AS (
        |  SELECT n, host, sm_idx, k, loc_idx,
@@ -1743,7 +1785,7 @@ object WebGraphOps {
        |    ${graft.text.Sitemaps.duckEntryPriorityMilli("u")} AS priority_milli
        |  FROM sce, entmap),
        |${UrlCanonical.duckCanonCtes("sle",
-          "host, sm_idx, k, loc_idx, lastmod_raw, priority_milli", idn, "sc")},
+          "host, sm_idx, k, loc_idx, lastmod_raw, priority_milli", DuckIdn, "sc")},
        |fd AS (
        |  SELECT host || '|' || k || '|' || loc_idx AS entry_key,
        |    host, k, loc_idx, canon AS loc_canon, lastmod_raw, priority_milli,
@@ -1777,7 +1819,6 @@ object WebGraphOps {
        |  strftime(d, '%Y-%m-%d') AS lastmod_day, priority_milli, rule,
        |  crawl_delay, rate, crawl_rank, (crawl_rank - 1) // rate AS slot
        |FROM sched""".stripMargin
-  }
 
   // --------- q167 end-to-end ZONE-sourced frontier (r17, beyond plan)
 
@@ -1870,7 +1911,6 @@ object WebGraphOps {
   }
 
   val q167Sql: String = {
-    val idn = Seq("bücher" -> "xn--bcher-kva")
     // static replay of the known tree over non-corrupt hosts: the k=0
     // gz leaf is first reachable DIRECTLY from the root's third slot —
     // depth 1, path root(00000)/00002 — and its depth-2 re-discovery
@@ -1883,14 +1923,14 @@ object WebGraphOps {
     // (00002) fetches nothing
     s"""WITH ${graft.text.HtmlExtract.duckEntmapCte},
        |${CorpusOps.messyUrlMkCte},
-       |${UrlCanonical.duckCanonCtes("mk", "doc_id", idn, "s")},
+       |${UrlCanonical.duckCanonCtes("mk", "doc_id", DuckIdn, "s")},
        |$sitemapCtes,
        |sld AS (
        |  SELECT n, host, sm_idx, k, loc_idx,
        |    ${graft.text.HtmlExtract.duckEntities(
               graft.text.Sitemaps.duckEntryLoc("u"))} AS url
        |  FROM sce, entmap),
-       |${UrlCanonical.duckCanonCtes("sld", "host, sm_idx, k, loc_idx", idn, "sc")},
+       |${UrlCanonical.duckCanonCtes("sld", "host, sm_idx, k, loc_idx", DuckIdn, "sc")},
        |cc AS (SELECT DISTINCT canon FROM s4),
        |gleaf AS (
        |  SELECT host,

@@ -130,9 +130,10 @@ object LangIdNB {
     val testGrams = grams(test, col("doc_id"))
       .groupBy(col("k").as("doc_id"), col("g")).agg(count(lit(1)).as("tf"))
     // per-doc gram total is arithmetic, not an aggregation: a document
-    // has exactly max(len − 2, 0) trigrams
+    // has exactly max(len − 2, 0) trigrams of its LOWERED text (Spark
+    // lowercases `İ` to two characters)
     val docN = test.select(col("doc_id"),
-      coalesce(greatest(length(col("text")) - 2, lit(0)).cast("long"),
+      coalesce(greatest(length(lower(col("text"))) - 2, lit(0)).cast("long"),
         lit(0L)).as("n"))
 
     // L(x) goes through bin() — a per-row string allocation — so every

@@ -29,6 +29,20 @@ class SourceGuardSpec extends AnyFunSuite {
       s"build sessions with GraftSession.builder(master, shufflePartitions); found: $sites")
   }
 
+  test("link-signal constants: the scheme screen and the IDN vocabulary are each defined once") {
+    val main = sources("src/main")
+    def sites(literal: String) = main.flatMap { case (p, text) =>
+      text.linesIterator.filter(_.contains(literal)).map(_ => p.getFileName.toString)
+    }
+    val schemeLike = "\"^[A-Za-z][A-Za-z0-9+.\\\\-]*:\""
+    val idnVocab = "Seq(\"bücher\" -> \"xn--bcher-kva\")"
+    val found = Map(
+      "WebGraphOps.SchemeLike" -> sites(schemeLike), "CorpusOps.DuckIdn" -> sites(idnVocab))
+    assert(found == Map(
+      "WebGraphOps.SchemeLike" -> Seq("WebGraphOps.scala"),
+      "CorpusOps.DuckIdn" -> Seq("CorpusOps.scala")), s"found: $found")
+  }
+
   private val allowedMains = Set(
     "Bench", "BenchAB", "Verify", "DayScale", "ScaleBench", "AdaptiveGate",
     "PlanDump", "FaultProbe", "StreamFaultProbe", "SpillProbe", "WindowSpillProbe")

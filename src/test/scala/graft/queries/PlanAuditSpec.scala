@@ -542,9 +542,12 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("q169/q172: link-attribute and canonical extraction add NO data-keyed shuffle beyond the zone read") {
+    // q175's meta-refresh extraction shares q172's page frame and is
+    // held to the same map-only shape
     for ((name, df) <- Seq(
         "q169" -> WebGraphOps.q169NofollowEdges(spark, dir),
-        "q172" -> WebGraphOps.q172CanonicalLink(spark, dir))) {
+        "q172" -> WebGraphOps.q172CanonicalLink(spark, dir),
+        "q175" -> CorpusOps.q175MetaRefresh(spark, dir))) {
       val p = plan(df)
       // the WARC exact reader legitimately exchanges on FILE keys to
       // assemble chunked records; the extraction itself must add no

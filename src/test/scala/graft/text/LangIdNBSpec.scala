@@ -103,7 +103,8 @@ class LangIdNBSpec extends SparkTestBase {
       (4L, "ein fauler hund schlaeft den ganzen tag", "de"),
       (5L, "quick brown things and lazy ones", "en"),
       (10L, "springt der fuchs ueber den hund", "de"),
-      (15L, "ab", "en")) // < 3 chars → n = 0, still scored
+      (15L, "ab", "en"), // < 3 chars → n = 0, still scored
+      (16L, "İstanbul", "en")) // lower() makes `İ` two characters
       .toDF("doc_id", "text", "lang")
     val all = LangIdNB.scoreAll(docs)
     assert(all.columns.toSeq == Seq("doc_id", "lang_pred", "score_fp", "n"))
@@ -111,6 +112,9 @@ class LangIdNBSpec extends SparkTestBase {
     val nmap = all.select($"doc_id", $"n").as[(Long, Long)].collect().toMap
     assert(nmap(15L) == 0)
     assert(nmap(1L) == "the quick brown fox jumps over the lazy dog".length - 2)
+    val grams = docs.select($"doc_id", size(LangIdNB.charTrigrams($"text")).cast("long"))
+      .as[(Long, Long)].collect().toMap
+    assert(nmap == grams, "n must equal the trigram count of every doc")
     val held = all.filter(!LangIdNB.isTrain($"doc_id")).drop("n")
     val pred = LangIdNB.predictions(docs)
     assert(held.except(pred).count() == 0 && pred.except(held).count() == 0)
