@@ -3,7 +3,7 @@ package graft.olhovivo
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -86,9 +86,11 @@ object AverageSpeeds {
         val aggOut = agg.select(aggCols.map(col): _*)
         val slowOut = slowPoints(clean, conf).select(slowCols.map(col): _*)
         val acessOut = acessiveis(agg).select(acessCols.map(col): _*)
+        // the row count rides on the write itself: no extra action
         def write(df: DataFrame, path: String): Long = {
-          graft.sources.IO.writeCsv(df, path)
-          df.count()
+          val rows = Observation()
+          graft.sources.IO.writeCsv(df.observe(rows, count(lit(1)).as("rows")), path)
+          rows.get("rows").asInstanceOf[Long]
         }
         val base = Map(
           "velocidades_agregadas" -> write(aggOut, aggPath(outBase, date)),

@@ -1,6 +1,9 @@
 package graft.olhovivo
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 
 /** EP2 — flatten raw Olho Vivo JSON snapshots into the flat `posicoes`
@@ -53,9 +56,20 @@ object IngestPositions {
         col("j._corrupt_record").as("_corrupt_record"))
   }
 
-  /** Average DECODED file size of the first `sample` files under `path`
-    * — the scale statistic that picks the decode strategy. Listing cost
-    * is bounded by the sample, not the zone. For gzip members the
+  /** The zone's data files as the JSON source listed them when
+    * [[readRaw]] resolved its relation: the listing the scan uses also
+    * gives the size statistic. */
+  private def listedFiles(raw: DataFrame): Seq[FileStatus] =
+    raw.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.collect { case index: PartitioningAwareFileIndex => index.allFiles() }
+      .getOrElse(Nil)
+
+  /** Average DECODED file size of the first `sample` of `files` — the
+    * scale statistic that picks the decode strategy. The sizes come
+    * from the file index the read already holds, so no second listing
+    * runs (a Hadoop `listFiles` walk of the local filesystem loads each
+    * file's permission, one subprocess per file). For gzip members the
     * on-disk length lies by the codec ratio, so the gzip ISIZE trailer
     * (last 4 LE bytes = uncompressed size mod 2³², exact for < 4 GB
     * members — RFC 1952) is read instead: two seeks per sampled file.
@@ -71,31 +85,23 @@ object IngestPositions {
     * size could only steer the pick toward the small-doc file source,
     * whose failure mode is slower, not wrong. Multi-member WARC zones go
     * through [[graft.sources.WarcGz]]'s member index, never this path. */
-  private def avgFileBytes(spark: SparkSession, path: String,
+  private def avgFileBytes(spark: SparkSession, files: Seq[FileStatus],
                            sample: Int = 256): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0L
-    val it = fs.listFiles(p, true)
-    var n = 0L; var bytes = 0L
-    while (it.hasNext && n < sample) {
-      val st = it.next()
-      if (!st.getPath.getName.startsWith("_")) {
-        n += 1
-        bytes +=
-          (if (st.getPath.getName.endsWith(".gz") && st.getLen >= 4) {
-            val in = fs.open(st.getPath)
-            try {
-              in.seek(st.getLen - 4)
-              val b = new Array[Byte](4)
-              in.readFully(b)
-              ((b(0) & 0xffL)) | ((b(1) & 0xffL) << 8) |
-                ((b(2) & 0xffL) << 16) | ((b(3) & 0xffL) << 24)
-            } finally in.close()
-          } else st.getLen)
-      }
-    }
-    if (n == 0) 0L else bytes / n
+    val sampled = files.take(sample)
+    val bytes = sampled.iterator.map { st =>
+      if (st.getPath.getName.endsWith(".gz") && st.getLen >= 4) {
+        val fs = st.getPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val in = fs.open(st.getPath)
+        try {
+          in.seek(st.getLen - 4)
+          val b = new Array[Byte](4)
+          in.readFully(b)
+          ((b(0) & 0xffL)) | ((b(1) & 0xffL) << 8) |
+            ((b(2) & 0xffL) << 16) | ((b(3) & 0xffL) << 24)
+        } finally in.close()
+      } else st.getLen
+    }.sum
+    if (sampled.isEmpty) 0L else bytes / sampled.size
   }
 
   /** Strategy cutover: above ~4 MB/doc the unsplittable-record convoy
@@ -104,11 +110,30 @@ object IngestPositions {
     * shuffle win. */
   private[graft] val FatDocBytes: Long = 4L * 1024 * 1024
 
+  /** The decode plan for `path` and, on the small-doc path, the number
+    * of tasks its write is packed into: the estimated decoded bytes
+    * (average × file count) in `spark.sql.files.maxPartitionBytes`
+    * pieces, rounded up to whole waves of one task per core (5 tasks on
+    * 4 cores would leave 3 idle behind the fifth). The JSON source
+    * charges `openCostInBytes` (4 MB) per file, so left alone it splits
+    * a day of KB-sized polls into dozens of scan tasks and output files. */
+  private def decodePlan(spark: SparkSession, path: String): (DataFrame, Option[Int]) = {
+    val raw = readRaw(spark, path)
+    val files = listedFiles(raw)
+    val avg = avgFileBytes(spark, files)
+    if (avg >= FatDocBytes) (readRawDistributed(spark, path), None)
+    else {
+      val cores = spark.sparkContext.defaultParallelism
+      val wave = spark.sessionState.conf.filesMaxPartitionBytes * cores
+      val waves = (avg * files.size + wave - 1) / wave
+      (raw, Some(cores * math.max(1L, waves).toInt))
+    }
+  }
+
   /** Scale-adaptive raw read: multiLine JSON source for the deployed
     * small-doc zone, decode-after-redistribute when polls are fat. */
   def readRawAdaptive(spark: SparkSession, path: String): DataFrame =
-    if (avgFileBytes(spark, path) >= FatDocBytes) readRawDistributed(spark, path)
-    else readRaw(spark, path)
+    decodePlan(spark, path)._1
 
   /** The two-level unnest + rename + timestamp parse (reference F1+E1,
     * ingestao:48–62). Built-in `Explode` generators only — stays inside
@@ -139,10 +164,15 @@ object IngestPositions {
   /** Full EP2: raw day → flat parquet. Output partitioned by event date
     * (the reference's manual `raw/YYYY-MM/pos-YYYY-MM-DD.parquet` scheme,
     * ingestao:31, expressed as real Hive partitioning so downstream reads
-    * prune). */
-  def run(spark: SparkSession, rawPath: String, outPath: String): Unit =
+    * prune). A small-doc day is written by [[decodePlan]]'s task count
+    * (one task per core for the deployed day) instead of one task per
+    * few dozen polls, so EP3 opens a handful of files, not dozens. */
+  def run(spark: SparkSession, rawPath: String, outPath: String): Unit = {
+    val (raw, writeTasks) = decodePlan(spark, rawPath)
+    val flat = flatten(raw)
+      .withColumn("data", to_date(timestamp_seconds(col("timestamp"))))
+    // coalesce is narrow: the packed tasks read the same splits, no shuffle
     graft.sources.IO.writePartitionedParquet(
-      flatten(readRawAdaptive(spark, rawPath))
-        .withColumn("data", to_date(timestamp_seconds(col("timestamp")))),
-      outPath, Seq("data"))
+      writeTasks.fold(flat)(flat.coalesce), outPath, Seq("data"))
+  }
 }

@@ -184,16 +184,18 @@ object WarcGz {
   // Distributed index build + parallel member scan
   // ------------------------------------------------------------------
 
+  /** Every `.gz` file under `path`, depth-first in listing order (the
+    * order Hadoop's recursive `listFiles` yields), walked with plain
+    * `listStatus`: `listFiles` loads each file's permission, which on
+    * the local filesystem starts one subprocess per file. */
   private def listGzFiles(spark: SparkSession, path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".gz")) out += st.getPath.toString
-    }
-    out.result()
+    def walk(st: org.apache.hadoop.fs.FileStatus): Iterator[String] =
+      if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(walk)
+      else if (st.getPath.getName.endsWith(".gz")) Iterator(st.getPath.toString)
+      else Iterator.empty
+    fs.listStatus(p).iterator.flatMap(walk).toList
   }
 
   /** Build the member index for every `.gz` file under `path`: one

@@ -43,6 +43,22 @@ class SourceGuardSpec extends AnyFunSuite {
       "CorpusOps.DuckIdn" -> Seq("CorpusOps.scala")), s"found: $found")
   }
 
+  // Hadoop's recursive `listFiles` and `listLocatedStatus` copy every
+  // status into a LocatedFileStatus, and the copy loads the file's
+  // permission: on the local filesystem without native IO that starts
+  // one subprocess per file (about 1 s per 256 poll files on a 4-core
+  // Linux host). Walk with `listStatus`, or read the sizes from a file
+  // index Spark already built.
+  private val forkingListing =
+    ("""\blistFiles\s*\([^()]*,\s*true\s*\)|\blistLocated""" + "Status").r
+
+  test("listings: src/main makes no recursive listFiles or listLocatedStatus call") {
+    val sites = sources("src/main").flatMap { case (p, text) =>
+      forkingListing.findAllIn(text).map(m => s"${p.getFileName}: $m")
+    }
+    assert(sites.isEmpty, s"found: $sites")
+  }
+
   private val allowedMains = Set(
     "Bench", "BenchAB", "Verify", "DayScale", "ScaleBench", "AdaptiveGate",
     "PlanDump", "FaultProbe", "StreamFaultProbe", "SpillProbe", "WindowSpillProbe")

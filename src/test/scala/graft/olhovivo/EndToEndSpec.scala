@@ -3,6 +3,9 @@ package graft.olhovivo
 import java.nio.file.{Files, Path}
 import java.time.LocalDate
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 /** End-to-end job test (SURVEY.md §5 item 5): synthetic raw JSON day →
   * EP2 (flatten to date-partitioned parquet) → EP3 (three CSV outputs),
   * including a corrupt poll and a cross-midnight `ta`. */
@@ -56,5 +59,20 @@ class EndToEndSpec extends SparkTestBase {
     assert(row.getAs[String]("intervalo") == "23:30-00:00")
     // tempo = 100 + 70 = 170 s total
     assert(row.getAs[String]("tempo") == "170")
+  }
+
+  test("EP3 on a date with no positions: every output counts 0 and the counts return") {
+    val raw = scratchDir("e2e-empty-raw")
+    writeDay(raw)
+    val posOut = scratchDir("e2e-empty-pos").toString + "/posicoes"
+    IngestPositions.run(spark, raw.toString + "/year=2025/month=03/day=06", posOut)
+    val outBase = scratchDir("e2e-empty-out").toString
+    // each count is an observed metric of its write; a metric that never
+    // arrives would block the run, so bound it
+    val counts = Await.result(Future(AverageSpeeds.run(spark, posOut,
+      LocalDate.of(2025, 3, 9), outBase, SpeedPipeline.SpeedConf(), writePerHop = true))(
+      ExecutionContext.global), 120.seconds)
+    assert(counts == Map("velocidades_agregadas" -> 0L, "lentidao" -> 0L,
+      "acessiveis" -> 0L, "velocidades" -> 0L))
   }
 }

@@ -2,6 +2,12 @@ package graft.olhovivo
 
 import java.nio.file.{Files, Path}
 import java.time.Instant
+import java.util.zip.GZIPOutputStream
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
+import org.apache.spark.sql.functions.{col, timestamp_seconds, to_date}
 
 /** EP2 tests: fixture JSON day per FIXTURES.md §1 — nominal polls, one
   * corrupt file (F2 isolation), a vehicle missing `a` (typed null), and
@@ -87,5 +93,82 @@ class IngestPositionsSpec extends SparkTestBase {
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(data"),
       s"date filter did not reach partition pruning:\n$plan")
+  }
+
+  /** `n` polls of three vehicles each under one hour of 2025-03-06,
+    * every document followed by `pad` bytes of whitespace (valid JSON,
+    * so the decoded size grows without adding rows); `.json.gz` single
+    * gzip members when `gzip`. Returns the day path. */
+  private def writePolls(dir: Path, n: Int, pad: Int = 0, gzip: Boolean = false): String = {
+    val hourDir = dir.resolve("year=2025/month=03/day=06/hour=14")
+    Files.createDirectories(hourDir)
+    (0 until n).foreach { i =>
+      val vs = (0 until 3).map { v =>
+        f"""{"p": "${1000 * v + i}", "a": ${v != 1}, "ta": "2025-03-06T14:${i % 60}%02d:0${v}Z",""" +
+          s""" "py": -23.5$i$v, "px": -46.6$v$i}"""
+      }.mkString("[", ", ", "]")
+      val doc = s"""{"hr": "14:00", "l": [{"c": "L$i", "cl": $i, "sl": 1,""" +
+        s""" "lt0": "A", "lt1": "B", "vs": $vs}]}""" + " " * pad
+      val bytes = doc.getBytes("UTF-8")
+      if (gzip) {
+        val out = new GZIPOutputStream(Files.newOutputStream(hourDir.resolve(f"poll_$i%03d.json.gz")))
+        try out.write(bytes) finally out.close()
+      } else Files.write(hourDir.resolve(f"poll_$i%03d.json"), bytes)
+    }
+    dir.toString + "/year=2025/month=03/day=06"
+  }
+
+  private def distributed(day: String): Boolean =
+    IngestPositions.readRawAdaptive(spark, day).queryExecution.logical
+      .exists(_.isInstanceOf[RepartitionOperation])
+
+  private def partFiles(out: String): Seq[Path] = {
+    val walk = Files.walk(java.nio.file.Paths.get(out))
+    try walk.iterator.asScala.filter(_.getFileName.toString.startsWith("part-")).toList
+    finally walk.close()
+  }
+
+  /** `run`'s output holds exactly the rows of the unpacked multiLine
+    * read, date column included. */
+  private def assertRunRows(day: String, out: String, rows: Long): Unit = {
+    val expected = IngestPositions.flatten(IngestPositions.readRaw(spark, day))
+      .withColumn("data", to_date(timestamp_seconds(col("timestamp"))))
+    val fp = graft.SpillProbe.fingerprint(spark.read.parquet(out))
+    assert(fp == graft.SpillProbe.fingerprint(expected))
+    assert(fp._2 == rows)
+  }
+
+  test("EP2 seam, small polls: multiLine read, write packed to at most one task per core") {
+    val day = writePolls(scratchDir("rawday_small"), 200)
+    val cores = spark.sparkContext.defaultParallelism
+    // unpacked, the JSON source's 4 MB per-file open cost caps a
+    // 128 MB split at 32 polls, so 200 polls take 7 tasks
+    assert(IngestPositions.readRaw(spark, day).rdd.getNumPartitions > cores)
+    assert(!distributed(day))
+    val out = scratchDir("posout_small").toString + "/posicoes"
+    IngestPositions.run(spark, day, out)
+    val parts = partFiles(out)
+    assert(parts.nonEmpty && parts.size <= cores, s"${parts.size} part files")
+    assertRunRows(day, out, 600)
+  }
+
+  test("EP2 seam, fat polls: an average document of FatDocBytes takes the distributed decode") {
+    val day = writePolls(scratchDir("rawday_fat"), 2, pad = IngestPositions.FatDocBytes.toInt)
+    assert(distributed(day))
+    val out = scratchDir("posout_fat").toString + "/posicoes"
+    IngestPositions.run(spark, day, out)
+    assertRunRows(day, out, 6)
+  }
+
+  test("EP2 seam, gzip poll: the ISIZE trailer, not the on-disk length, sizes the document") {
+    val raw = scratchDir("rawday_gz")
+    val day = writePolls(raw, 1, pad = IngestPositions.FatDocBytes.toInt, gzip = true)
+    val gz = Files.list(raw.resolve("year=2025/month=03/day=06/hour=14"))
+      .iterator.asScala.toList
+    assert(gz.size == 1 && Files.size(gz.head) < IngestPositions.FatDocBytes)
+    assert(distributed(day))
+    val out = scratchDir("posout_gz").toString + "/posicoes"
+    IngestPositions.run(spark, day, out)
+    assertRunRows(day, out, 3)
   }
 }
