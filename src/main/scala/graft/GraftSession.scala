@@ -14,6 +14,19 @@ import org.apache.spark.sql.SparkSession
   *  - Session timezone is pinned to UTC: the reference pipeline parses
   *    naive UTC timestamps (reference: etl-olho-vivo-ingestao-posicoes.py:58
   *    runs on Lambda with TZ=UTC), and the DuckDB oracle also runs in UTC.
+  *  - Generated code is compiled once per JVM, not once per session
+  *    (while it stays in Spark's codegen cache). Spark's `CodeGenerator`
+  *    caches each compiled class under the key (task thread's context
+  *    classloader, source). With session artifact isolation on (Spark's
+  *    default), every session's tasks run under that session's own
+  *    `ExecutorClassLoader`, so a fresh session misses the cache for
+  *    every executor-side class, and Janino also resolves names through
+  *    that loader. EP2 and EP3 each run in a fresh session, as the two
+  *    deployed jobs do, so with isolation on they recompile on every pass.
+  *    Isolation only separates artifacts that sessions add (jars, class
+  *    files), and the engine adds none (SourceGuardSpec pins that), so
+  *    [[conf]] turns it off and all sessions of a context share one task
+  *    classloader and one codegen cache.
   */
 object GraftSession {
 
@@ -53,7 +66,12 @@ object GraftSession {
       // The driver testdata's `events` table carries parquet TIMESTAMP(NANOS),
       // which Spark only reads as a raw long (SPARK-40819). Tables.events()
       // rebuilds a proper TimestampType column from it.
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      // Isolation gives each session its own task classloader, which is
+      // part of the codegen cache key, so every fresh session would
+      // recompile every generated class. It protects nothing here: the
+      // engine adds no session artifacts. See the design note above.
+      "spark.sql.artifact.isolation.enabled" -> "false")
     if (!master.startsWith("local-cluster")) common
     else common ++ Map(
       "spark.executor.extraClassPath" ->
@@ -116,7 +134,11 @@ object GraftSession {
   }
 
   /** Apply the must-have configs to an externally built session (e.g. the
-    * driver's own). Runtime-settable confs + function registration only. */
+    * driver's own). Runtime-settable confs + function registration only:
+    * creation-time confs of [[conf]], such as
+    * `spark.sql.artifact.isolation.enabled`, cannot be applied to a
+    * session that already exists. A `newSession()` of a context built
+    * by [[builder]] inherits them. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

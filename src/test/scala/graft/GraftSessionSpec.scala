@@ -65,6 +65,8 @@ class GraftSessionSpec extends SparkTestBase {
     assert(local("spark.master") === "local[3]")
     assert(local("spark.sql.shuffle.partitions") === "3")
     assert(local.keySet.intersect(executorKeys).isEmpty)
+    // one task classloader per context, so one codegen cache
+    assert(local("spark.sql.artifact.isolation.enabled") === "false")
     // no cluster starts: the configs are read, not applied
     val master = "local-cluster[2,4,1024]"
     val cluster = GraftSession.conf(master, 8)
@@ -78,6 +80,23 @@ class GraftSessionSpec extends SparkTestBase {
     // the common configs are the same for both kinds of master
     assert(cluster -- executorKeys ===
       local ++ Map("spark.master" -> master, "spark.sql.shuffle.partitions" -> "8"))
+  }
+
+  test("fresh sessions share one task classloader, so generated code compiles once per JVM") {
+    // Spark's codegen cache keys each class by the task thread's context
+    // classloader; a loader per session would recompile every class in
+    // every fresh session (EP2 and EP3 each run in one)
+    def taskLoaders(s: org.apache.spark.sql.SparkSession): Set[String] = {
+      import s.implicits._
+      s.range(0, 8, 1, 4).mapPartitions { _ =>
+        val cl = Thread.currentThread.getContextClassLoader
+        Iterator(s"${cl.getClass.getName}@${System.identityHashCode(cl)}")
+      }.collect().toSet
+    }
+    val first = taskLoaders(spark.newSession())
+    val second = taskLoaders(spark.newSession())
+    assert(first == second, s"per-session task classloaders: $first vs $second")
+    assert(spark.newSession().conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
   test("events table reads through a tuned session at every granularity") {

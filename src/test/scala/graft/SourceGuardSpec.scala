@@ -59,6 +59,20 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(sites.isEmpty, s"found: $sites")
   }
 
+  // GraftSession turns off per-session artifact isolation so that every
+  // session of a context shares one task classloader and one codegen
+  // cache. That is only safe while no session adds artifacts of its own:
+  // a jar or class added to one session would then reach all of them.
+  private val artifactCall =
+    ("""\baddArtifacts?\s*\(|\baddJar\s*\(|(?i)"\s*add\s+jars?\b""").r
+
+  test("session artifacts: src/main adds none (addArtifact, addJar, ADD JAR)") {
+    val sites = sources("src/main").flatMap { case (p, text) =>
+      artifactCall.findAllIn(text).map(m => s"${p.getFileName}: $m")
+    }
+    assert(sites.isEmpty, s"found: $sites")
+  }
+
   private val allowedMains = Set(
     "Bench", "BenchAB", "Verify", "DayScale", "ScaleBench", "AdaptiveGate",
     "PlanDump", "FaultProbe", "StreamFaultProbe", "SpillProbe", "WindowSpillProbe")
